@@ -21,7 +21,9 @@ WARC archives (binaryFile glob, file-parallel)
      collapsed — never raises on tag soup)
   -> documents rows: doc_id = xxhash64(uri) (deterministic, re-crawl
      stable), source = registered host, lang = NULL (language ID is an
-     annotation operator, run_corpus's text_langid stage), n_chars
+     annotation operator, run_corpus's text_langid stage), n_chars;
+     records without a target URI have no doc_id and go to
+     out/quarantine_records with a reason
   -> lineage-manifested resumable write (out/documents), bucketed by
      doc_id hash exactly like run_corpus's output
 
@@ -129,8 +131,10 @@ def main(argv=None) -> None:
     wnd = Window.partitionBy(ukey).orderBy(
         F.col("warc_date").asc_nulls_last(),
         F.col("uri").asc_nulls_last())
+    # a record without a target URI has no page identity to dedup on:
+    # every one passes here and is dead-lettered after extraction
     winners = (proj.withColumn("_rk", F.row_number().over(wnd))
-                   .filter("_rk = 1").drop("_rk")
+                   .filter("_rk = 1 OR uri IS NULL").drop("_rk")
                    .withColumnRenamed("uri", "_wuri")
                    .withColumnRenamed("warc_date", "_wdate"))
     # NULL-SAFE equi-join (review r5): a response record may lack its
@@ -146,7 +150,7 @@ def main(argv=None) -> None:
         .drop("_wuri", "_wdate"))
     pages = pages.withColumn(
         "ex", html_extract_udf()(F.col("body").cast("string")))
-    docs = pages.select(
+    extracted = pages.select(
         # doc_id stays a pure function of the RAW uri (re-crawl
         # stable, resume-layout stable); canon_url rides along for
         # downstream URL analytics
@@ -159,11 +163,29 @@ def main(argv=None) -> None:
          .alias("source"),
         F.length("ex.text").cast("bigint").alias("n_chars"),
         F.col("ex.title").alias("title"),
-        "uri", "canon_url", "warc_date") \
-        .dropDuplicates(["doc_id"]).cache()
+        "uri", "canon_url", "warc_date", "path",
+        F.xxhash64("body").alias("_content_hash")).cache()
+
+    # dead letters: xxhash64(NULL) is one constant, so URI-less records
+    # would otherwise all collapse into a single document
+    rpath = os.path.join(args.out, "quarantine_records")
+    extracted.filter(F.col("uri").isNull()).select(
+        "path", "warc_date", "title", "text",
+        F.lit("record has no WARC-Target-URI").alias("reason")) \
+        .write.mode("overwrite").parquet(rpath)
+    stats["quarantined_records"] = spark.read.parquet(rpath).count()
+
+    # exact twin records (same uri and date) share a doc_id: keep one
+    # by a total order, so the winning body never depends on task order
+    twin = Window.partitionBy("doc_id").orderBy(
+        F.col("warc_date").asc_nulls_last(), "_content_hash", "text")
+    docs = (extracted.filter(F.col("uri").isNotNull())
+            .withColumn("_rk", F.row_number().over(twin))
+            .filter("_rk = 1").drop("_rk", "_content_hash", "path"))
     html_unique = docs.count()
     stats["url_duplicates"] = (stats["records_walked"]
                                - stats["skipped_non_html"]
+                               - stats["quarantined_records"]
                                - html_unique)
     kept = docs.filter(F.col("n_chars") >= args.min_chars)
     stats["documents"] = kept.count()
@@ -177,7 +199,7 @@ def main(argv=None) -> None:
                                     cell_col="bucket", id_col="doc_id")
     stats["written_docs"] = sum(r["rows"] for r in index.values())
     stats["partitions"] = len(index)
-    docs.unpersist()
+    extracted.unpersist()
 
     print(json.dumps(stats))
     if not args.keep_session:

@@ -19,6 +19,30 @@ images table
 Every stage is resumable and deterministic; the kNN never materializes
 an all-pairs matrix (the reference's own BAD note,
 triplet_mining.py:17-20).
+
+Resume. Both tables carry per-partition lineage manifests, and a rerun
+applies each done-set to its stage's INPUT, before the expensive
+operators:
+
+- embeddings are partitioned by ``bucket = pmod(xxhash64(image_id),
+  64)``, which is known before decode: rows of committed buckets are
+  never decoded again (with ``--min-sharpness`` the filter runs before
+  the quality gate, which decodes too). The kNN candidates are the
+  freshly embedded rows plus the committed buckets read back from
+  parquet. With ``--augment-copies`` the variants hash to their own
+  buckets, so the filter runs after the variants are made. A bucket
+  whose rows all fail decode or the gate commits nothing, so a rerun
+  scores those rows again.
+- mined pairs are partitioned by ``cell_r7``: only rows of uncommitted
+  cells are kNN anchors, while candidates stay every embedded row, so
+  a resumed cell holds exactly what a clean run writes. Rows whose cell
+  mined nothing (no in-ring neighbour) commit no partition and no
+  manifest row, so every rerun retries them with a small kNN; with no
+  anchor left the kNN does not run.
+- ``--pca-k``: the PCA fit needs every raw feature and the committed
+  vectors are already projected, so embeddings resume all-or-nothing:
+  reused when every input bucket is committed, otherwise recomputed
+  (and refit) for every row, with only the uncommitted buckets written.
 """
 
 from __future__ import annotations
@@ -35,6 +59,9 @@ from loc2vec_spark import lineage  # noqa: E402
 from loc2vec_spark.operators import geo, images as img_ops  # noqa: E402
 from loc2vec_spark.operators import stats, triplets  # noqa: E402
 from loc2vec_spark.session import get_spark  # noqa: E402
+
+N_BUCKETS = 64  # embeddings partitions: pmod(xxhash64(image_id), 64)
+
 
 def main(argv=None) -> None:
     ap = argparse.ArgumentParser()
@@ -64,64 +91,129 @@ def main(argv=None) -> None:
     ensure_workers_can_import(spark)
 
     images = spark.read.parquet(args.images)
+    emb_dir = os.path.join(args.out, "embeddings")
+    mined_dir = os.path.join(args.out, "mined")
+    bucket = F.pmod(F.xxhash64("image_id"), F.lit(N_BUCKETS))
 
     # Quality gate (image face of the corpus job's text filters): score
     # once, semi-join the ids that pass — blurry/empty tiles never reach
     # the featurizer. Join, not collect: the pass-set is data-scale.
-    if args.min_sharpness > 0:
-        good = img_ops.image_quality(images).filter(
+    def gate(df):
+        if args.min_sharpness <= 0:
+            return df
+        good = img_ops.image_quality(df).filter(
             (F.col("ok")) & (F.col("sharpness") >= args.min_sharpness)) \
             .select("image_id")
-        images = images.join(good, "image_id", "left_semi")
+        return df.join(good, "image_id", "left_semi")
 
+    # every id that may hold an embedding; its rows carry the metadata
+    # the cells come from
+    pool = images
     # Optional pool multiplication: seeded dihedral variants join the
     # originals BEFORE featurization (contrastive-training widening;
     # the reference trains on raw tiles only). union, not a flag on the
     # featurizer: the variants are real rows with their own ids, so
     # every downstream stage (cells, kNN, lineage) treats them uniformly.
     if args.augment_copies > 0:
+        gated = gate(images)
         # a flipped/rotated tile keeps its source row's metadata (same
         # location, same caption) — rejoin it via the base id
-        meta = images.drop("bytes", "w", "h") \
+        meta = gated.drop("bytes", "w", "h") \
             .withColumnRenamed("image_id", "base_id")
-        aug = (img_ops.augment_images(images, seed=args.seed,
+        aug = (img_ops.augment_images(gated, seed=args.seed,
                                       copies=args.augment_copies)
                .join(meta, "base_id").drop("base_id", "aug_op"))
-        images = images.unionByName(aug.select(*images.columns))
+        pool = gated.unionByName(aug.select(*gated.columns))
+
+    # F12: cells from metadata (one pass for both the kNN-blocking and
+    # output-partition resolutions)
+    cells_all = geo.with_cells(geo.with_latlon(pool),
+                               resolutions=(args.res, 7)) \
+        .select("image_id", F.col(f"cell_r{args.res}").alias("cell"),
+                "cell_r7").cache()
+    cached = [cells_all]
+
+    # resume: committed embeddings buckets are reused, not decoded
+    reuse = lineage.done_partitions(emb_dir)
+    unembedded = lineage.resume_filter(
+        cells_all.withColumn("bucket", bucket), emb_dir, cell_col="bucket",
+        done=reuse)
+    featurize = not reuse or not unembedded.isEmpty()
+    if featurize and args.pca_k:
+        reuse = set()  # all-or-nothing, see the module doc
+    # an input id is its own embedding id, so committed rows drop before
+    # the gate decodes them; variant ids are only known after the union
+    feed = pool if args.augment_copies else images
+    if reuse:
+        feed = lineage.resume_filter(feed.withColumn("bucket", bucket),
+                                     emb_dir, cell_col="bucket",
+                                     done=reuse).drop("bucket")
+    if not args.augment_copies:
+        feed = gate(feed)
 
     # E2: embedding export — id travels in the row (fixes the reference's
     # positional id/embedding misalignment, loc2vec_run.py:33-48).
     # Cache BEFORE PCA: pca_project runs a moments job plus the
     # projection, and without the cache each would re-decode every PNG.
-    emb = img_ops.image_features(images).cache()
-    dim = 16
-    if args.pca_k:
-        feats = emb
-        emb = stats.pca_project(feats.withColumn(
-            "embedding", F.col("embedding").cast("array<double>")),
-            id_col="image_id", emb_col="embedding",
-            dim=dim, k=args.pca_k).withColumnRenamed("pca", "embedding") \
-            .cache()
-        dim = args.pca_k
-    lineage.write_partitioned(
-        emb.withColumn("bucket",
-                       F.pmod(F.xxhash64("image_id"), F.lit(64))),
-        os.path.join(args.out, "embeddings"),
-        cell_col="bucket", id_col="image_id")
+    parts = []
+    dim = args.pca_k or 16
+    if featurize:
+        fresh = img_ops.image_features(feed).cache()
+        cached.append(fresh)
+        if args.pca_k:
+            fresh = stats.pca_project(fresh.withColumn(
+                "embedding", F.col("embedding").cast("array<double>")),
+                id_col="image_id", emb_col="embedding",
+                dim=16, k=args.pca_k).withColumnRenamed("pca", "embedding") \
+                .cache()
+            cached.append(fresh)
+        lineage.write_resumable(fresh.withColumn("bucket", bucket), emb_dir,
+                                cell_col="bucket", id_col="image_id")
+        parts.append(fresh)
+    if reuse:
+        parts.append(lineage.read_partitions(
+            spark, emb_dir, cell_col="bucket", parts=reuse)
+            .select("image_id", "embedding"))
+    emb = parts[0]
+    for p in parts[1:]:
+        emb = emb.unionByName(p)
 
-    # F12: cells from metadata (one pass for both the kNN-blocking and
-    # output-partition resolutions); J5+W1: cell-blocked kNN in
-    # embedding space
-    cells_all = geo.with_cells(geo.with_latlon(images),
-                               resolutions=(args.res, 7)) \
-        .select("image_id", F.col(f"cell_r{args.res}").alias("cell"),
-                "cell_r7").cache()
+    # J5+W1: cell-blocked kNN in embedding space; on resume only rows
+    # of uncommitted res-7 cells are anchors
     pts = cells_all.select("image_id", "cell") \
                    .filter(F.col("cell").isNotNull()) \
                    .join(emb, "image_id")
+    if reuse:
+        # holds a parquet read-back; the anchor filter and both kNN
+        # sides would each scan and join it again
+        pts = pts.cache()
+        cached.append(pts)
+    mined_done = lineage.done_partitions(mined_dir)
+    anchors = None
+    if mined_done:
+        todo = lineage.resume_filter(cells_all, mined_dir,
+                                     cell_col="cell_r7", done=mined_done) \
+            .filter(F.col("cell").isNotNull() & F.col("cell_r7").isNotNull())
+        anchors = pts.join(todo.select("image_id"), "image_id", "left_semi")
+    index = {}
+    if not mined_done or not todo.isEmpty():
+        index = _mine(pts, anchors, cells_all, mined_dir, args, dim)
+    for df in cached:
+        df.unpersist()
+    print(f"committed {len(index)} partitions, "
+          f"{sum(r['rows'] for r in index.values())} mined rows")
+    if not args.keep_session:
+        spark.stop()
+
+
+def _mine(pts, anchors, cells_all, mined_dir: str, args, dim: int) -> dict:
+    """kNN top-k for ``anchors`` (default every row of ``pts``) against
+    every row of ``pts``, a seeded hard pick, and the resumable write of
+    the mined pairs partitioned by the anchor's res-7 cell."""
     topk = triplets.knn_topk(pts, id_col="image_id", emb_col="embedding",
                              cell_col="cell", res=args.res, dim=dim,
-                             k=args.k, cap=args.cap or None)
+                             k=args.k, cap=args.cap or None,
+                             anchors=anchors)
 
     # W2: seeded pick within the top-k (triplet_mining.py:147, seeded —
     # the reference used unseeded random.choice; divergence §5.1)
@@ -139,13 +231,8 @@ def main(argv=None) -> None:
                                  "cell_r7")
     out = mined.join(cells_out, "anchor_id") \
                .filter(F.col("cell_r7").isNotNull())
-    index = lineage.write_resumable(out, os.path.join(args.out, "mined"),
-                                    cell_col="cell_r7", id_col="anchor_id")
-    print(f"committed {len(index)} partitions, "
-          f"{sum(r['rows'] for r in index.values())} mined rows")
-    if not args.keep_session:
-        spark.stop()
-
+    return lineage.write_resumable(out, mined_dir, cell_col="cell_r7",
+                                   id_col="anchor_id")
 
 if __name__ == "__main__":
     main()

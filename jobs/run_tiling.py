@@ -8,8 +8,11 @@ Pipeline: images table -> caption/phash lat-lon -> multi-resolution cell
 assignment -> triplet candidates (spatial positive + pooled far-cell
 negatives) -> parquet partitioned by cell_r{res} with hot-cell salting
 and per-partition lineage manifests. Killing the job mid-write and
-re-running resumes: committed partitions are skipped via their
-manifests (see loc2vec_spark.lineage).
+re-running resumes: anchors in committed ``cell_out`` partitions are
+dropped before the triplet join (see loc2vec_spark.lineage), so the
+join runs for the uncommitted anchors only and a rerun over finished
+output exits before it. Positives and negatives are still drawn from
+every row, so a resumed partition holds what a clean run writes.
 
 Sizing note (VERDICT r4 polish): `spark.sql.shuffle.partitions` should
 scale with DATA, not just cores — the positive join shuffles O(pairs)
@@ -70,6 +73,7 @@ def main(argv=None) -> None:
                       F.col(f"cell_r{args.res}").alias("cell_out"),
                       F.col(f"cell_r{args.triplet_res}").alias("cell")) \
               .persist()
+    cached = base
     quarantine = base.filter(F.col("cell").isNull())
     n_bad = quarantine.count()
     if n_bad:
@@ -77,17 +81,25 @@ def main(argv=None) -> None:
             os.path.join(args.out, "_quarantine"))
         base = base.filter(F.col("cell").isNotNull())
 
-    trip = triplets.triplet_table_spatial(
-        base, id_col="image_id", lat_col="lat", lon_col="lon",
-        cell_col="cell", res=args.triplet_res, n_neg=args.n_neg,
-        join_salt=args.join_salt)
-    out = trip.join(base.select("image_id", "cell_out")
-                        .withColumnRenamed("image_id", "anchor_id"),
-                    "anchor_id")
-
-    index = lineage.write_resumable(out, args.out, cell_col="cell_out",
-                                    id_col="anchor_id",
-                                    salt_target=args.salt_target)
+    # resume: only anchors of uncommitted partitions enter the join
+    done = lineage.done_partitions(args.out)
+    anchors = None
+    if done:
+        anchors = lineage.resume_filter(base, args.out, cell_col="cell_out",
+                                        done=done)
+    index = {}
+    if anchors is None or not anchors.isEmpty():
+        trip = triplets.triplet_table_spatial(
+            base, id_col="image_id", lat_col="lat", lon_col="lon",
+            cell_col="cell", res=args.triplet_res, n_neg=args.n_neg,
+            join_salt=args.join_salt, anchors=anchors)
+        out = trip.join(base.select("image_id", "cell_out")
+                            .withColumnRenamed("image_id", "anchor_id"),
+                        "anchor_id")
+        index = lineage.write_resumable(out, args.out, cell_col="cell_out",
+                                        id_col="anchor_id",
+                                        salt_target=args.salt_target)
+    cached.unpersist()
     print(f"committed {len(index)} partitions "
           f"({sum(r['rows'] for r in index.values())} rows), "
           f"quarantined {n_bad} rows")

@@ -258,21 +258,51 @@ def done_partitions(out_dir: str) -> set[int]:
     return {int(r["partition"]) for r in _read_manifest_rows(lin_dir)}
 
 
-def resume_filter(df: DataFrame, out_dir: str, *,
-                  cell_col: str) -> DataFrame:
+def resume_filter(df: DataFrame, out_dir: str, *, cell_col: str,
+                  done: set[int] | None = None) -> DataFrame:
     """Drop rows whose partition already committed (idempotent re-run).
+
+    ``df`` may be any frame that carries the partition column — a job's
+    anchor INPUT, not just its final output, so committed rows skip the
+    expensive operators instead of only the write. ``done`` is the
+    committed set as read earlier by the caller (one listing per run);
+    by default it is read from ``out_dir``. With nothing committed the
+    input is returned unchanged, so a fresh run keeps its plan.
 
     The done-set rides a broadcast anti-join, not an isin() literal —
     at 10^12-image scale the committed-partition list can be millions of
     cells, far past expression-literal limits.
     """
-    done = done_partitions(out_dir)
+    if done is None:
+        done = done_partitions(out_dir)
     if not done:
         return df
     spark = df.sparkSession
     done_df = spark.createDataFrame([(int(c),) for c in sorted(done)],
                                     f"{cell_col} BIGINT")
     return df.join(F.broadcast(done_df), cell_col, "left_anti")
+
+
+def read_partitions(spark: SparkSession, out_dir: str, *, cell_col: str,
+                    parts: set[int]) -> DataFrame:
+    """The committed rows of ``parts`` read back from ``out_dir``, for a
+    resume that reuses earlier output instead of recomputing it. The
+    partition filter prunes the scan to those directories; it is a
+    literal list, so this suits tables with few partitions (hash
+    buckets), not a res-7 cell layout.
+
+    The listing runs on the driver: past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    partition dirs Spark lists them in a distributed job, which costs
+    more than the listing itself at this size."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(max(int(prev), len(os.listdir(out_dir)))))
+    try:
+        table = spark.read.parquet(out_dir)
+    finally:
+        spark.conf.set(key, prev)
+    return table.filter(F.col(cell_col).isin(sorted(int(c) for c in parts)))
 
 
 def write_resumable(df: DataFrame, out_dir: str, *, cell_col: str,
@@ -284,13 +314,17 @@ def write_resumable(df: DataFrame, out_dir: str, *, cell_col: str,
     wholesale (dynamic partition overwrite replaces exactly the
     partitions present in this run's data).
     """
-    todo = resume_filter(df, out_dir, cell_col=cell_col)
+    done = done_partitions(out_dir)
+    todo = resume_filter(df, out_dir, cell_col=cell_col, done=done)
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                           "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        if todo.isEmpty():
+        # only a resume can filter its input down to nothing; on a
+        # fresh run the probe would evaluate the input's first
+        # partitions alone, before the write evaluates it again
+        if done and todo.isEmpty():
             return {}
         return write_partitioned(todo, out_dir, cell_col=cell_col,
                                  id_col=id_col, salt_target=salt_target,

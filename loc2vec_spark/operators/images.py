@@ -140,7 +140,11 @@ def image_features(images: DataFrame) -> DataFrame:
                               arr.min() / 255.0, arr.max() / 255.0])
                 ids.append(iid)
                 vecs.append(np.asarray(feats, dtype=np.float32))
-            yield pd.DataFrame({"image_id": ids, "embedding": vecs})
+            # an empty vecs list becomes a float64 column, which Arrow
+            # cannot convert to array<float>: a batch whose rows were
+            # all quarantined yields nothing
+            if ids:
+                yield pd.DataFrame({"image_id": ids, "embedding": vecs})
 
     return images.select("image_id", "bytes").filter(
         "bytes IS NOT NULL").mapInPandas(gen, FEATURES_SCHEMA)

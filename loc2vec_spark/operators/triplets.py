@@ -47,7 +47,8 @@ def _hash_sql(expr: str, seed: int, mod: int) -> str:
 def knn_topk(pts: DataFrame, *, id_col: str, emb_col: str,
              cell_col: str, res: int, dim: int, k: int = 5,
              ring: int = 1, include_dist: bool = True,
-             cap: int | None = None, seed: int = 42) -> DataFrame:
+             cap: int | None = None, seed: int = 42,
+             anchors: DataFrame | None = None) -> DataFrame:
     """Top-k nearest in-ring neighbors per row.
 
     pts must carry (id_col, emb_col, cell_col at resolution ``res``).
@@ -55,19 +56,28 @@ def knn_topk(pts: DataFrame, *, id_col: str, emb_col: str,
     computed in double with a fixed-order expression so the DuckDB oracle
     hashes identically.
 
+    ``anchors`` (same columns, default ``pts``) are the rows that get
+    neighbors; candidates are always drawn from ``pts``, so the result
+    equals the full run's rows for those anchors (a resume passes only
+    its uncommitted rows).
+
     ``cap`` bounds the CANDIDATE side per cell (seeded uniform sample via
     :func:`percell_cap`): a hot urban cell with 10^6 rows would otherwise
     make the join quadratic in that cell. Capping makes the kNN
     approximate within hot cells only — a documented downsampling, off by
     default so the oracle-parity path stays exact.
     """
-    a = pts.select(F.col(id_col).alias("anchor_id"),
-                   F.col(emb_col).alias("a_emb"),
-                   F.col(cell_col).alias("a_cell"))
+    if anchors is None:
+        anchors = pts
+    a = anchors.select(F.col(id_col).alias("anchor_id"),
+                       F.col(emb_col).alias("a_emb"),
+                       F.col(cell_col).alias("a_cell"))
     a = kring_explode(a, "a_cell", res, k=ring, out_col="nb_cell")
     c = pts.select(F.col(id_col).alias("neighbor_id"),
                    F.col(emb_col).alias("c_emb"),
                    F.col(cell_col).alias("c_cell"))
+    if anchors is not pts:
+        c = _in_ring_cells(c, a)
     if cap is not None:
         c = percell_cap(c, cell_col="c_cell", id_col="neighbor_id",
                         cap=cap, seed=seed)
@@ -82,6 +92,15 @@ def knn_topk(pts: DataFrame, *, id_col: str, emb_col: str,
     if include_dist:
         sel.append(F.round("dist", 6).alias("dist"))
     return out.select(*sel)
+
+
+def _in_ring_cells(c: DataFrame, a: DataFrame) -> DataFrame:
+    """Candidates ``c`` (keyed by ``c_cell``) restricted to the cells of
+    the exploded anchors' rings (``nb_cell``). Whole cells are kept, so
+    a per-cell cap applied afterwards samples exactly as over all of
+    ``c``; no anchor loses a candidate."""
+    return c.join(a.select(F.col("nb_cell").alias("c_cell")), "c_cell",
+                  "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -257,7 +276,8 @@ def percell_cap(pts: DataFrame, *, cell_col: str, id_col: str, cap: int,
 def spatial_positive(pts: DataFrame, *, id_col: str, lat_col: str,
                      lon_col: str, cell_col: str, res: int,
                      cap: int = 256, seed: int = 42,
-                     join_salt: int = 1) -> DataFrame:
+                     join_salt: int = 1,
+                     anchors: DataFrame | None = None) -> DataFrame:
     """J2 at scale: positive = spatially nearest in-ring neighbor.
 
     This is the north-star reading of the reference's anchor/positive
@@ -277,19 +297,26 @@ def spatial_positive(pts: DataFrame, *, id_col: str, lat_col: str,
     min-struct agg composes exactly, so the result is bit-identical at
     any S (test_triplets).
 
+    ``anchors`` (default ``pts``) are the rows that get a positive; the
+    candidate pool is always drawn from ``pts`` (see :func:`knn_topk`).
+
     Output: (anchor_id, positive_id, sdist).
     """
-    cand_pool = percell_cap(
-        pts.select(F.col(id_col).alias("positive_id"),
-                   F.col(lat_col).alias("p_lat"),
-                   F.col(lon_col).alias("p_lon"),
-                   F.col(cell_col).alias("c_cell")),
-        cell_col="c_cell", id_col="positive_id", cap=cap, seed=seed)
-    a = pts.select(F.col(id_col).alias("anchor_id"),
-                   F.col(lat_col).alias("a_lat"),
-                   F.col(lon_col).alias("a_lon"),
-                   F.col(cell_col).alias("a_cell"))
+    if anchors is None:
+        anchors = pts
+    a = anchors.select(F.col(id_col).alias("anchor_id"),
+                       F.col(lat_col).alias("a_lat"),
+                       F.col(lon_col).alias("a_lon"),
+                       F.col(cell_col).alias("a_cell"))
     a = kring_explode(a, "a_cell", res, k=1, out_col="nb_cell")
+    cand_pool = pts.select(F.col(id_col).alias("positive_id"),
+                           F.col(lat_col).alias("p_lat"),
+                           F.col(lon_col).alias("p_lon"),
+                           F.col(cell_col).alias("c_cell"))
+    if anchors is not pts:
+        cand_pool = _in_ring_cells(cand_pool, a)
+    cand_pool = percell_cap(cand_pool, cell_col="c_cell",
+                            id_col="positive_id", cap=cap, seed=seed)
     join_cond = F.col("nb_cell") == F.col("c_cell")
     if join_salt > 1:
         cand_pool = cand_pool.withColumn(
@@ -320,32 +347,40 @@ def spatial_positive(pts: DataFrame, *, id_col: str, lat_col: str,
 def triplet_table_spatial(pts: DataFrame, *, id_col: str, lat_col: str,
                           lon_col: str, cell_col: str, res: int,
                           n_neg: int = 5, cap: int = 256,
-                          seed: int = 42, join_salt: int = 1) -> DataFrame:
+                          seed: int = 42, join_salt: int = 1,
+                          anchors: DataFrame | None = None) -> DataFrame:
     """Full scalable triplet table over an images-shaped input:
     spatial positive + far-cell negatives. This is the path the
-    throughput bench measures (BASELINE.json metric)."""
+    throughput bench measures (BASELINE.json metric).
+
+    ``anchors`` (a subset of ``pts``, default all of it) are the rows
+    that get a triplet; positives and negatives are drawn from all of
+    ``pts``, so each anchor's row equals the full table's."""
     pos = spatial_positive(pts, id_col=id_col, lat_col=lat_col,
                            lon_col=lon_col, cell_col=cell_col, res=res,
-                           cap=cap, seed=seed, join_salt=join_salt)
+                           cap=cap, seed=seed, join_salt=join_salt,
+                           anchors=anchors)
     neg = negative_sample_farcell_pooled(
         pts, id_col=id_col, cell_col=cell_col, res=res, n_neg=n_neg,
-        seed=seed)
+        seed=seed, anchors=anchors)
     negs = (neg.groupBy("anchor_id")
                .agg(F.sort_array(F.collect_list(
                    F.struct("rank", "neg_id"))).alias("s"))
                .select("anchor_id", F.col("s.neg_id").alias("negative_ids")))
-    anchors = pts.select(F.col(id_col).alias("anchor_id"),
-                         F.col(cell_col).alias("cell"))
-    return (anchors.join(pos.select("anchor_id", "positive_id"),
-                         "anchor_id", "left")
-                   .join(negs, "anchor_id", "left"))
+    rows = (pts if anchors is None else anchors).select(
+        F.col(id_col).alias("anchor_id"), F.col(cell_col).alias("cell"))
+    return (rows.join(pos.select("anchor_id", "positive_id"),
+                      "anchor_id", "left")
+                .join(negs, "anchor_id", "left"))
 
 
 def negative_sample_farcell_pooled(pts: DataFrame, *, id_col: str,
                                    cell_col: str, res: int, n_neg: int = 5,
                                    ring: int = 1, seed: int = 42,
                                    pool_size: int = 4096,
-                                   fanout: int = 8) -> DataFrame:
+                                   fanout: int = 8,
+                                   anchors: DataFrame | None = None
+                                   ) -> DataFrame:
     """Far-cell negatives, linear-in-N scale path.
 
     The bucket-join variant (:func:`negative_sample_farcell`) materializes
@@ -357,6 +392,9 @@ def negative_sample_farcell_pooled(pts: DataFrame, *, id_col: str,
     filters the ones inside its k-ring, and keeps a seeded top ``n_neg``.
     Work is O(N * fanout * n_neg): the same plan at 10^12 rows broadcasts
     the same few thousand pool rows.
+
+    ``anchors`` (default ``pts``) are the rows that get negatives; the
+    pool and its size are always drawn from ``pts``.
 
     Output: (anchor_id, rank, neg_id) — deterministic at any parallelism.
     """
@@ -377,10 +415,11 @@ def negative_sample_farcell_pooled(pts: DataFrame, *, id_col: str,
         .select("neg_id", "ni", "nj", "bkt",
                 _id_hash_col("neg_id", seed + 2, 1_000_000_007).alias("ord"))
 
-    a = pts.select(F.col(id_col).alias("anchor_id"),
-                   F.expr(cells.cell_i_sql(cell_col)).alias("ai"),
-                   F.expr(cells.cell_j_sql(cell_col)).alias("aj"),
-                   _id_hash_col(id_col, seed, n_buckets).alias("bkt"))
+    a = (pts if anchors is None else anchors).select(
+        F.col(id_col).alias("anchor_id"),
+        F.expr(cells.cell_i_sql(cell_col)).alias("ai"),
+        F.expr(cells.cell_j_sql(cell_col)).alias("aj"),
+        _id_hash_col(id_col, seed, n_buckets).alias("bkt"))
     far = (f"GREATEST(LEAST(ABS(ai - ni), {n} - ABS(ai - ni)), "
            f"ABS(aj - nj)) > {ring}")
     cand = (a.join(F.broadcast(pool), "bkt")

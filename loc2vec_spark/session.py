@@ -6,6 +6,26 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: driver heap ceiling; below it the default is half of physical RAM
+MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``min(16g, MemTotal / 2)`` as a JVM size. In local mode the
+    driver is also the executor, and a flat 16g heap on a 16 GB host
+    lets the JVM outgrow physical memory and get OOM-killed, which
+    Python only sees as a dead gateway. Without a readable
+    ``meminfo`` (non-Linux hosts) the ceiling itself is returned."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048  # kB -> MB/2
+                    return f"{min(MAX_DRIVER_MEM_MB, half_mb)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{MAX_DRIVER_MEM_MB}m"
+
 
 def get_spark(master: str | None = None, app_name: str = "loc2vec_spark",
               shuffle_partitions: int | None = None,
@@ -37,7 +57,8 @@ def get_spark(master: str | None = None, app_name: str = "loc2vec_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -40,6 +40,14 @@ def test_decode_quarantines_corrupt_bytes(spark):
     assert not bool(out.set_index("image_id").loc["bad", "ok"])
 
 
+def test_image_features_all_corrupt_batch_yields_no_rows(spark):
+    """A batch whose every row fails to decode (a resume can feed one
+    such bucket alone) quarantines its rows instead of failing."""
+    df = spark.createDataFrame([("bad", bytearray(b"garbage"))],
+                               "image_id STRING, bytes BINARY")
+    assert img_ops.image_features(df).count() == 0
+
+
 def test_image_features_deterministic_and_fixes_id_alignment(spark, images):
     a = img_ops.image_features(images).toPandas()
     b = img_ops.image_features(images.repartition(5)).toPandas()

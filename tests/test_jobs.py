@@ -4,6 +4,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -12,6 +13,9 @@ def images_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("job_imgs")
     write_fixtures(str(d), n_images=120, with_channels=False, n_shards=2)
     return os.path.join(str(d), "images.parquet")
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run_job(module_path, argv, spark):
@@ -23,12 +27,92 @@ def _run_job(module_path, argv, spark):
     mod.main(argv)
 
 
-def test_run_mining_end_to_end(spark, images_dir, tmp_path):
+def _assert_no_cache(spark):
+    """A job releases every frame it cached before main returns."""
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _digest(spark, path, cell_col, id_col):
+    """partition -> (rows, id checksum, whole-row content digest)."""
+    df = spark.read.parquet(path)
+    cols = ", ".join(f"`{c}`" for c in sorted(df.columns))
+    return {r[0]: tuple(r[1:]) for r in df.groupBy(cell_col).agg(
+        F.count("*"), F.expr(f"bit_xor(xxhash64({id_col}))"),
+        F.expr(f"bit_xor(xxhash64({cols}))")).collect()}
+
+
+def _snapshot(path):
+    """Data files (size, mtime) and manifest rows of a committed table."""
+    import json
+
+    from loc2vec_spark import lineage
+    files = {}
+    for d, subs, names in os.walk(path):
+        subs[:] = [x for x in subs if not x.startswith("_")]
+        for fn in names:
+            if fn.endswith(".parquet"):
+                st = os.stat(os.path.join(d, fn))
+                files[os.path.relpath(os.path.join(d, fn), path)] = \
+                    (st.st_size, st.st_mtime_ns)
+    rows = lineage._read_manifest_rows(os.path.join(path, "_lineage"))
+    return files, sorted(json.dumps(r, sort_keys=True) for r in rows)
+
+
+def _assert_manifest_matches_files(spark, path, cell_col, id_col):
+    """One manifest row per committed partition, equal to its files."""
+    from loc2vec_spark import lineage
+    rows = lineage._read_manifest_rows(os.path.join(path, "_lineage"))
+    got = sorted((int(r["partition"]), r["rows"], r["checksum"])
+                 for r in rows)
+    want = sorted((c, v[0], v[1]) for c, v in
+                  _digest(spark, path, cell_col, id_col).items())
+    assert got == want
+
+
+def _interrupt(path, cell_col, parts, delete):
+    """Simulate a commit killed after its data write: the manifest rows
+    of ``parts`` are gone, and the data dirs of ``delete`` too."""
+    import json
+    import shutil
+    lin = os.path.join(path, "_lineage")
+    for fn in os.listdir(lin):
+        full = os.path.join(lin, fn)
+        if fn.endswith(".crc"):
+            os.remove(full)
+        elif fn.endswith(".json"):
+            with open(full) as f:
+                keep = [ln for ln in f if ln.strip() and
+                        json.loads(ln)["partition"] not in parts]
+            with open(full, "w") as f:
+                f.writelines(keep)
+    for p in delete:
+        shutil.rmtree(os.path.join(path, f"{cell_col}={p}"))
+
+
+class _Spy:
+    """Wraps a module function, keeping the first argument of each call."""
+
+    def __init__(self, monkeypatch, mod, name):
+        self.inputs = []
+        fn = getattr(mod, name)
+
+        def spy(df, *a, **kw):
+            self.inputs.append(df)
+            return fn(df, *a, **kw)
+        monkeypatch.setattr(mod, name, spy)
+
+    def rows(self):
+        return sum(df.count() for df in self.inputs)
+
+
+def test_run_mining_end_to_end(spark, images_dir, tmp_path, monkeypatch):
     out = str(tmp_path / "mined_out")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spark.catalog.clearCache()
     _run_job(os.path.join(repo, "jobs", "run_mining.py"),
              ["--images", images_dir, "--out", out, "--res", "9",
               "--k", "3", "--keep-session"], spark)
+    _assert_no_cache(spark)
 
     emb = spark.read.parquet(os.path.join(out, "embeddings"))
     assert emb.count() > 100  # corrupt rows quarantined, rest embedded
@@ -45,25 +129,94 @@ def test_run_mining_end_to_end(spark, images_dir, tmp_path):
         {"hard_id": "approx_count_distinct"}).collect()
     assert all(r[1] == 1 for r in per_anchor)
 
-    # resume: second run commits nothing new
+    # resume: second run decodes nothing and leaves both tables'
+    # files and manifests untouched
+    tables = [os.path.join(out, t) for t in ("embeddings", "mined")]
+    before = [_snapshot(t) for t in tables]
+    from loc2vec_spark.operators import images as img_ops
+    feats = _Spy(monkeypatch, img_ops, "image_features")
     _run_job(os.path.join(repo, "jobs", "run_mining.py"),
              ["--images", images_dir, "--out", out, "--res", "9",
               "--k", "3", "--keep-session"], spark)
+    _assert_no_cache(spark)
+    assert feats.rows() == 0
+    assert [_snapshot(t) for t in tables] == before
     assert spark.read.parquet(os.path.join(out, "mined")).count() == n
 
 
-def test_run_mining_with_pca(spark, images_dir, tmp_path):
+def test_run_mining_kill_mid_write(spark, images_dir, tmp_path,
+                                   monkeypatch):
+    """A commit interrupted in both tables (manifest rows lost, some
+    data dirs left behind, some deleted) resumes to a clean run's
+    content, decoding only the rows of the lost embeddings buckets."""
+    import shutil
+
+    from loc2vec_spark.operators import images as img_ops, triplets
+    job = os.path.join(REPO, "jobs", "run_mining.py")
+    clean = str(tmp_path / "clean")
+    argv = ["--images", images_dir, "--res", "2", "--k", "3",
+            "--keep-session"]
+    _run_job(job, argv + ["--out", clean], spark)
+    tables = (("embeddings", "bucket", "image_id"),
+              ("mined", "cell_r7", "anchor_id"))
+    want = {t: _digest(spark, os.path.join(clean, t), c, i)
+            for t, c, i in tables}
+
+    out = str(tmp_path / "resumed")
+    shutil.copytree(clean, out)
+    buckets = sorted(want["embeddings"])[:4]
+    _interrupt(os.path.join(out, "embeddings"), "bucket", buckets,
+               delete=buckets[:2])
+    cells = sorted(want["mined"])[:2]
+    assert len(want["mined"]) > len(cells)
+    _interrupt(os.path.join(out, "mined"), "cell_r7", cells,
+               delete=cells[:1])
+
+    feats = _Spy(monkeypatch, img_ops, "image_features")
+    _run_job(job, argv + ["--out", out], spark)
+    _assert_no_cache(spark)
+    lost = spark.read.parquet(images_dir).filter(
+        F.pmod(F.xxhash64("image_id"), F.lit(64)).isin(buckets)).count()
+    assert feats.rows() == lost
+    for t, c, i in tables:
+        path = os.path.join(out, t)
+        assert _digest(spark, path, c, i) == want[t], t
+        _assert_manifest_matches_files(spark, path, c, i)
+
+    # every anchor has an in-ring neighbour at res 2, so every anchor
+    # cell is committed now: a rerun runs no kNN and changes nothing
+    before = [_snapshot(os.path.join(out, t)) for t, _c, _i in tables]
+    knn = _Spy(monkeypatch, triplets, "knn_topk")
+    _run_job(job, argv + ["--out", out], spark)
+    assert knn.inputs == []
+    assert [_snapshot(os.path.join(out, t)) for t, _c, _i in tables] \
+        == before
+
+
+def test_run_mining_with_pca(spark, images_dir, tmp_path, monkeypatch):
     out = str(tmp_path / "mined_pca")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _run_job(os.path.join(repo, "jobs", "run_mining.py"),
-             ["--images", images_dir, "--out", out, "--res", "9",
-              "--k", "2", "--pca-k", "4", "--keep-session"], spark)
-    emb = spark.read.parquet(os.path.join(out, "embeddings"))
+    argv = ["--images", images_dir, "--out", out, "--res", "9",
+            "--k", "2", "--pca-k", "4", "--keep-session"]
+    _run_job(os.path.join(repo, "jobs", "run_mining.py"), argv, spark)
+    emb_dir = os.path.join(out, "embeddings")
+    emb = spark.read.parquet(emb_dir)
     row = emb.select("embedding").first()
     assert len(row["embedding"]) == 4
 
+    # resume is all-or-nothing under PCA: one lost bucket refits over
+    # every row, and the result equals the clean run
+    want = _digest(spark, emb_dir, "bucket", "image_id")
+    _interrupt(emb_dir, "bucket", {min(want)}, delete=())
+    from loc2vec_spark.operators import images as img_ops
+    feats = _Spy(monkeypatch, img_ops, "image_features")
+    _run_job(os.path.join(repo, "jobs", "run_mining.py"), argv, spark)
+    assert feats.rows() == spark.read.parquet(images_dir).count()
+    assert _digest(spark, emb_dir, "bucket", "image_id") == want
 
-def test_run_mining_quality_gate(spark, images_dir, tmp_path):
+
+def test_run_mining_quality_gate(spark, images_dir, tmp_path,
+                                 monkeypatch):
     """--min-sharpness drops low-texture tiles before featurization:
     an absurd threshold keeps nothing; a zero threshold keeps all —
     and the gated embedding set is a subset of the ungated one."""
@@ -73,22 +226,38 @@ def test_run_mining_quality_gate(spark, images_dir, tmp_path):
     imgs = spark.read.parquet(images_dir)
     qual = img_ops.image_quality(imgs).filter("ok").toPandas()
     thr = float(qual.sharpness.quantile(0.5))  # median gate: ~half pass
-    _run_job(os.path.join(repo, "jobs", "run_mining.py"),
-             ["--images", images_dir, "--out", out, "--res", "9",
-              "--k", "2", "--min-sharpness", str(thr), "--keep-session"],
-             spark)
-    emb = spark.read.parquet(os.path.join(out, "embeddings"))
+    argv = ["--images", images_dir, "--out", out, "--res", "9",
+            "--k", "2", "--min-sharpness", str(thr), "--keep-session"]
+    _run_job(os.path.join(repo, "jobs", "run_mining.py"), argv, spark)
+    emb_dir = os.path.join(out, "embeddings")
+    emb = spark.read.parquet(emb_dir)
     n_pass = int((qual.sharpness >= thr).sum())
     assert emb.count() == n_pass
     assert 0 < n_pass < len(qual)
+
+    # a resume drops committed buckets before the gate, which decodes;
+    # buckets with no passing row never commit and are scored again
+    from loc2vec_spark import lineage
+    want = _digest(spark, emb_dir, "bucket", "image_id")
+    lost = sorted(want)[:3]
+    _interrupt(emb_dir, "bucket", set(lost), delete=lost)
+    done = sorted(lineage.done_partitions(emb_dir))
+    gate = _Spy(monkeypatch, img_ops, "image_quality")
+    _run_job(os.path.join(repo, "jobs", "run_mining.py"), argv, spark)
+    todo = imgs.filter(~F.pmod(F.xxhash64("image_id"), F.lit(64))
+                       .isin(done)).count()
+    assert 0 < gate.rows() == todo < imgs.count()
+    assert _digest(spark, emb_dir, "bucket", "image_id") == want
 
 
 def test_run_tiling_end_to_end(spark, images_dir, tmp_path):
     out = str(tmp_path / "tiles_out")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spark.catalog.clearCache()
     _run_job(os.path.join(repo, "jobs", "run_tiling.py"),
              ["--images", images_dir, "--out", out, "--keep-session"],
              spark)
+    _assert_no_cache(spark)
     tiles = spark.read.parquet(out)
     n = tiles.count()
     assert n > 100
@@ -100,7 +269,38 @@ def test_run_tiling_end_to_end(spark, images_dir, tmp_path):
     _run_job(os.path.join(repo, "jobs", "run_tiling.py"),
              ["--images", images_dir, "--out", out, "--keep-session"],
              spark)
+    _assert_no_cache(spark)
     assert spark.read.parquet(out).count() == n
+
+
+def test_run_tiling_kill_mid_write(spark, images_dir, tmp_path,
+                                   monkeypatch):
+    """An interrupted commit (manifest rows lost, one data dir left
+    behind, one deleted) resumes to a clean run's content; a rerun over
+    finished output skips the triplet join and changes nothing."""
+    import shutil
+
+    from loc2vec_spark.operators import triplets
+    job = os.path.join(REPO, "jobs", "run_tiling.py")
+    clean = str(tmp_path / "clean")
+    argv = ["--images", images_dir, "--keep-session"]
+    _run_job(job, argv + ["--out", clean], spark)
+    want = _digest(spark, clean, "cell_out", "anchor_id")
+
+    out = str(tmp_path / "resumed")
+    shutil.copytree(clean, out)
+    cells = sorted(want)[:4]
+    _interrupt(out, "cell_out", cells, delete=cells[:2])
+    _run_job(job, argv + ["--out", out], spark)
+    assert _digest(spark, out, "cell_out", "anchor_id") == want
+    _assert_manifest_matches_files(spark, out, "cell_out", "anchor_id")
+
+    before = _snapshot(out)
+    trip = _Spy(monkeypatch, triplets, "triplet_table_spatial")
+    _run_job(job, argv + ["--out", out], spark)
+    _assert_no_cache(spark)
+    assert trip.inputs == []
+    assert _snapshot(out) == before
 
 
 def test_run_corpus_end_to_end(spark, tmp_path):
@@ -247,23 +447,38 @@ def test_run_corpus_weighted_mixing(spark, tmp_path):
         assert per["src0"] > per["src1"]
 
 
-def test_run_mining_with_augmentation(spark, images_dir, tmp_path):
+def test_run_mining_with_augmentation(spark, images_dir, tmp_path,
+                                     monkeypatch):
     """--augment-copies multiplies the embedding pool: each source tile
     contributes itself plus N seeded flip/rotate variants that inherit
     its metadata (same cell), all flowing through featurize/kNN/write."""
     out = str(tmp_path / "mined_aug")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _run_job(os.path.join(repo, "jobs", "run_mining.py"),
-             ["--images", images_dir, "--out", out, "--res", "9",
-              "--k", "2", "--augment-copies", "1", "--keep-session"],
-             spark)
-    emb = spark.read.parquet(os.path.join(out, "embeddings"))
+    argv = ["--images", images_dir, "--out", out, "--res", "9",
+            "--k", "2", "--augment-copies", "1", "--keep-session"]
+    _run_job(os.path.join(repo, "jobs", "run_mining.py"), argv, spark)
+    emb_dir = os.path.join(out, "embeddings")
+    emb = spark.read.parquet(emb_dir)
     ids = [r.image_id for r in emb.select("image_id").collect()]
     aug_ids = [i for i in ids if "#aug" in i]
     base_ids = [i for i in ids if "#aug" not in i]
     # every decodable source tile embeds once raw + once augmented
     assert len(aug_ids) == len(base_ids)
     assert {i.split("#")[0] for i in aug_ids} == set(base_ids)
+
+    # variants hash to their own buckets: a resume decodes exactly the
+    # source and variant rows of the lost buckets
+    want = _digest(spark, emb_dir, "bucket", "image_id")
+    lost = sorted(want)[:3]
+    _interrupt(emb_dir, "bucket", set(lost), delete=lost)
+    from loc2vec_spark.operators import images as img_ops
+    feats = _Spy(monkeypatch, img_ops, "image_features")
+    _run_job(os.path.join(repo, "jobs", "run_mining.py"), argv, spark)
+    in_lost = F.pmod(F.xxhash64("image_id"), F.lit(64)).isin(lost)
+    pool = spark.read.parquet(images_dir).select("image_id").unionByName(
+        spark.createDataFrame([(i,) for i in aug_ids], "image_id STRING"))
+    assert feats.rows() == pool.filter(in_lost).count()
+    assert _digest(spark, emb_dir, "bucket", "image_id") == want
 
 
 def test_run_crawl_end_to_end(spark, tmp_path):
@@ -305,8 +520,10 @@ def test_run_crawl_end_to_end(spark, tmp_path):
         "crawlmod", os.path.join(repo, "jobs", "run_crawl.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    spark.catalog.clearCache()
     stats = mod.main(["--warc", str(wdir / "*"), "--out", out,
                       "--keep-session"])
+    _assert_no_cache(spark)
 
     assert stats["quarantined_archives"] == 1     # c.warc, truncated
     # 10 clean records + c.warc's salvaged prefix (>= 1 record)
@@ -396,8 +613,10 @@ def test_run_trajectory_end_to_end(spark, tmp_path):
     events.write.parquet(src)
     out = str(tmp_path / "tr_out")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spark.catalog.clearCache()
     _run_job(os.path.join(repo, "jobs", "run_trajectory.py"),
              ["--events", src, "--out", out, "--keep-session"], spark)
+    _assert_no_cache(spark)
 
     from loc2vec_spark import lineage
     from loc2vec_spark.queries import QUERIES
@@ -556,3 +775,88 @@ def test_run_crawl_keeps_null_date_records(spark, tmp_path):
     # the dated twin won, not the undated one
     assert rows["http://twin.test/c"]["warc_date"] == \
         "2026-02-05T00:00:00Z"
+
+
+def _crawl(spark, tmp_path, archives, name):
+    """Write ``archives`` ({file: bytes}) and run run_crawl over them."""
+    import importlib.util
+    wdir = tmp_path / "warcs"
+    wdir.mkdir()
+    for fn, data in archives.items():
+        (wdir / fn).write_bytes(data)
+    spec = importlib.util.spec_from_file_location(
+        name, os.path.join(REPO, "jobs", "run_crawl.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    out = str(tmp_path / "out")
+    return out, mod.main(["--warc", str(wdir / "*"), "--out", out,
+                          "--keep-session"])
+
+
+def test_run_crawl_dead_letters_records_without_uri(spark, tmp_path):
+    """Records lacking WARC-Target-URI would all hash to one doc_id
+    (xxhash64(NULL) is a constant) and collapse into one document; they
+    go to quarantine_records with a reason instead."""
+    from loc2vec_spark.operators.warc import build_warc
+
+    def no_uri(i):
+        page = f"<html><body><p>orphan {i}</p></body></html>".encode()
+        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                + b"Content-Length: " + str(len(page)).encode()
+                + b"\r\n\r\n" + page)
+        return (b"WARC/1.0\r\nWARC-Type: response\r\n"
+                + f"WARC-Record-ID: <urn:uuid:{i}>\r\n".encode()
+                + b"WARC-Date: 2026-02-01T00:00:00Z\r\n"
+                b"Content-Type: application/http; msgtype=response\r\n"
+                b"Content-Length: " + str(len(http)).encode()
+                + b"\r\n\r\n" + http + b"\r\n\r\n")
+
+    named = build_warc([{
+        "uri": "http://named.test/a", "date": "2026-02-01T00:00:00Z",
+        "status": 200, "content_type": "text/html",
+        "body": b"<html><body><p>named</p></body></html>"}])
+    out, stats = _crawl(spark, tmp_path,
+                        {"a.warc": no_uri(1) + named + no_uri(2)},
+                        "crawl_nouri")
+    assert stats["records_walked"] == 3
+    assert stats["quarantined_records"] == 2
+    assert stats["url_duplicates"] == 0
+    assert stats["documents"] == 1
+    docs = spark.read.parquet(os.path.join(out, "documents")).collect()
+    assert [r["uri"] for r in docs] == ["http://named.test/a"]
+    dead = spark.read.parquet(os.path.join(out, "quarantine_records"))
+    assert sorted(r["text"] for r in dead.collect()) == ["orphan 1",
+                                                         "orphan 2"]
+    assert {r["reason"] for r in dead.collect()} == \
+        {"record has no WARC-Target-URI"}
+
+
+def test_run_crawl_twin_records_keep_one_body_by_content_hash(spark,
+                                                               tmp_path):
+    """Exact twin fetches (same uri, same date, different bodies) share
+    a doc_id; the kept body is the smaller content hash whatever the
+    record order."""
+    from loc2vec_spark.operators.warc import build_warc
+
+    bodies = [b"<html><body><p>first body</p></body></html>",
+              b"<html><body><p>second body</p></body></html>"]
+
+    def twins(uri, order):
+        return build_warc([{
+            "uri": uri, "date": "2026-02-01T00:00:00Z", "status": 200,
+            "content_type": "text/html", "body": bodies[i]}
+            for i in order])
+
+    out, stats = _crawl(spark, tmp_path, {
+        "a.warc": twins("http://twin.test/a", (0, 1)),
+        "b.warc": twins("http://twin.test/b", (1, 0))}, "crawl_twins")
+    assert stats["documents"] == 2
+    assert stats["url_duplicates"] == 2
+    hashes = spark.createDataFrame([(bytearray(b),) for b in bodies],
+                                   "b BINARY") \
+        .select(F.xxhash64("b")).collect()
+    want = ("first body" if hashes[0][0] < hashes[1][0]
+            else "second body")
+    docs = spark.read.parquet(os.path.join(out, "documents")).collect()
+    assert {r["uri"]: r["text"] for r in docs} == {
+        "http://twin.test/a": want, "http://twin.test/b": want}

@@ -140,3 +140,41 @@ def test_spatial_positive_identical_across_join_salt(pts):
     assert len(base) > 0
     assert rows(4) == base
     assert rows(8) == base
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("cap", [None, 1])
+def test_knn_topk_anchor_subset_equals_filtered_full(pts, cap):
+    """kNN for a subset of anchors against all candidates is the full
+    run's rows for those anchors, capped or not (the resume path)."""
+    kw = dict(id_col="id", emb_col="emb", cell_col="cell", res=RES,
+              dim=DIM, k=3)
+    sub = pts.filter("id % 3 = 0")
+    full = _rows(triplets.knn_topk(pts, cap=cap, **kw)
+                 .filter("anchor_id % 3 = 0"))
+    got = triplets.knn_topk(pts, anchors=sub, cap=cap, **kw)
+    assert len(full) > 0
+    if cap:  # the cap binds on this fixture
+        assert full != _rows(triplets.knn_topk(pts, **kw)
+                             .filter("anchor_id % 3 = 0"))
+    assert _rows(got) == full
+
+
+@pytest.mark.parametrize("join_salt", [1, 8])
+def test_triplet_table_spatial_anchor_subset_equals_filtered_full(
+        pts, join_salt):
+    """Positives and negatives of a subset of anchors are drawn from
+    every row, so they equal the full table's rows for those anchors."""
+    kw = dict(id_col="id", lat_col="lat", lon_col="lon", cell_col="cell",
+              res=RES, n_neg=3, cap=1, join_salt=join_salt)
+    sub = pts.filter("id % 3 = 0")
+    full = triplets.triplet_table_spatial(pts, **kw) \
+        .filter("anchor_id % 3 = 0")
+    got = triplets.triplet_table_spatial(pts, anchors=sub, **kw)
+    rows = _rows(full)
+    assert len(rows) == len(_rows(sub))
+    assert any(r[2] is not None for r in rows)
+    assert _rows(got) == rows
