@@ -17,10 +17,10 @@ supported/unsupported boundary is explicit and tested.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from .rows import map_bytes
 
 # ISO/IEC 14496-3 sampling_frequency_index table (13818-7 shares it)
 _RATES = [96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
@@ -138,25 +138,16 @@ PROBE_SCHEMA = T.StructType([
 
 def aac_probe(audio: DataFrame) -> DataFrame:
     """Frame-walk probe over a binary ADTS column — the AAC counterpart
-    of ``mp3.mp3_probe``, same one-Arrow-crossing template, corrupt
-    streams quarantine as ok=false."""
+    of ``mp3.mp3_probe``, same per-row kernel of
+    :func:`.rows.map_bytes`, corrupt streams quarantine as ok=false."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    m = parse_adts(bytes(data))
-                    out.append((aid, True, m["profile"], m["rate"],
-                                m["channels"], m["n_frames"],
-                                round(m["duration_s"], 6),
-                                m["bitrate_kbps"]))
-                except Exception:
-                    out.append((aid, False) + (None,) * 6)
-            yield pd.DataFrame(out, columns=[f.name for f in PROBE_SCHEMA])
+    def kernel(aid, data):
+        m = parse_adts(data)
+        return [(aid, True, m["profile"], m["rate"], m["channels"],
+                 m["n_frames"], round(m["duration_s"], 6),
+                 m["bitrate_kbps"])]
 
-    return audio.select("audio_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, PROBE_SCHEMA)
+    return map_bytes(audio, "audio_id", PROBE_SCHEMA, kernel)
 
 
 def synth_adts_bytes(n_frames: int = 8, *, rate: int = 44100,

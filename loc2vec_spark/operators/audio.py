@@ -5,13 +5,13 @@ Round 1 stubbed ALL audio/video decode behind NotImplementedError
 however, needs none — the container format parses with stdlib ``wave``
 + struct and the samples are raw PCM — so audio gets a fully executable
 path: decode, per-clip stats, and fixed-dim spectral features, all
-through the same one-Arrow-crossing ``mapInPandas`` template as
-``images.decode_stats`` (corrupt clips quarantine via ok=false, never
-abort). Compressed-audio SAMPLE decode (mp3/aac synthesis) remains
-honestly stubbed, but MP3 container metadata parses for real — exact
-frame walk, duration, CBR/VBR, Xing header — in :mod:`.mp3`
-(``mp3_probe``); plugging a real sample decoder in is a one-function
-swap behind this same operator surface.
+per-row kernels of :func:`.rows.map_bytes` like ``images.decode_stats``
+(corrupt clips quarantine via ok=false, never abort). Compressed-audio
+SAMPLE decode (mp3/aac synthesis) remains honestly stubbed, but MP3
+container metadata parses for real — exact frame walk, duration,
+CBR/VBR, Xing header — in :mod:`.mp3` (``mp3_probe``); plugging a real
+sample decoder in is a one-function swap behind this same operator
+surface.
 
 Schema mirror of the images input_hint: (audio_id string, bytes binary,
 rate int, n_samples int, fmt string) — treat as an Iceberg audio table.
@@ -22,11 +22,12 @@ from __future__ import annotations
 import io
 import struct
 import wave
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from .rows import map_bytes
 
 
 def encode_wav(samples: np.ndarray, rate: int = 16_000) -> bytes:
@@ -171,32 +172,20 @@ STATS_SCHEMA = T.StructType([
 def audio_stats(audio: DataFrame) -> DataFrame:
     """Decode + per-clip signal stats; corrupt clips -> ok=false rows."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    rate, x = decode_wav(bytes(data))
-                    sb = np.signbit(x).astype(np.int8)
-                    zc = float(np.mean(np.abs(np.diff(sb)))) \
-                        if len(x) > 1 else 0.0
-                    # len-guard on rms too: np.mean over an empty clip
-                    # is NaN (+ RuntimeWarning), and a NaN rms under
-                    # ok=true silently falsifies downstream comparisons
-                    out.append((aid, True, rate, len(x), len(x) / rate,
-                                round(float(np.sqrt(np.mean(x * x))), 6)
-                                if len(x) else 0.0,
-                                round(float(np.max(np.abs(x))), 6)
-                                if len(x) else 0.0,
-                                round(zc, 6)))
-                except Exception:
-                    out.append((aid, False, None, None, None, None,
-                                None, None))
-            yield pd.DataFrame(out,
-                               columns=[f.name for f in STATS_SCHEMA])
+    def kernel(aid, data):
+        rate, x = decode_wav(data)
+        sb = np.signbit(x).astype(np.int8)
+        zc = float(np.mean(np.abs(np.diff(sb)))) if len(x) > 1 else 0.0
+        # len-guard on rms too: np.mean over an empty clip is NaN
+        # (+ RuntimeWarning), and a NaN rms under ok=true silently
+        # falsifies downstream comparisons
+        return [(aid, True, rate, len(x), len(x) / rate,
+                 round(float(np.sqrt(np.mean(x * x))), 6)
+                 if len(x) else 0.0,
+                 round(float(np.max(np.abs(x))), 6) if len(x) else 0.0,
+                 round(zc, 6))]
 
-    return audio.select("audio_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, STATS_SCHEMA)
+    return map_bytes(audio, "audio_id", STATS_SCHEMA, kernel)
 
 
 FEATURE_DIM = 16
@@ -215,30 +204,21 @@ def audio_features(audio: DataFrame, *, n_bands: int = 12) -> DataFrame:
     swap."""
     assert n_bands + 4 == FEATURE_DIM
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    rate, x = decode_wav(bytes(data))
-                    if len(x) < 2:
-                        continue
-                except Exception:
-                    continue  # quarantined
-                spec = np.abs(np.fft.rfft(x)) ** 2
-                bands = np.array_split(spec, n_bands)
-                feats = [float(np.log1p(b.sum())) for b in bands]
-                feats.append(float(np.sqrt(np.mean(x * x))))
-                sb = np.signbit(x).astype(np.int8)
-                feats.append(float(np.mean(np.abs(np.diff(sb)))))
-                feats.append(float(np.max(np.abs(x))))
-                feats.append(float(np.log1p(len(x) / rate)))
-                ids.append(aid)
-                vecs.append(np.asarray(feats, dtype=np.float32))
-            yield pd.DataFrame({"audio_id": ids, "embedding": vecs})
+    def kernel(aid, data):
+        rate, x = decode_wav(data)
+        if len(x) < 2:
+            return []
+        spec = np.abs(np.fft.rfft(x)) ** 2
+        bands = np.array_split(spec, n_bands)
+        feats = [float(np.log1p(b.sum())) for b in bands]
+        feats.append(float(np.sqrt(np.mean(x * x))))
+        sb = np.signbit(x).astype(np.int8)
+        feats.append(float(np.mean(np.abs(np.diff(sb)))))
+        feats.append(float(np.max(np.abs(x))))
+        feats.append(float(np.log1p(len(x) / rate)))
+        return [(aid, np.asarray(feats, dtype=np.float32))]
 
-    return audio.select("audio_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, FEATURES_SCHEMA)
+    return map_bytes(audio, "audio_id", FEATURES_SCHEMA, kernel)
 
 
 def synth_audio_pdf(n: int = 50, rate: int = 8_000,

@@ -26,11 +26,10 @@ joins and counts stay JVM-side.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from .rows import map_bytes
 
 
 # ---------------------------------------------------------------------------
@@ -242,31 +241,25 @@ def audio_fingerprints(audio: DataFrame, *, frame_len: int = 512,
     ``t``."""
     from .audio import decode_wav
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    _, x = decode_wav(bytes(data))
-                except Exception:
-                    continue  # quarantined (audio_stats surfaces it)
-                nf = len(x) // frame_len
-                if nf < 2:
-                    continue
-                frames = x[:nf * frame_len].reshape(nf, frame_len)
-                bins = np.abs(np.fft.rfft(frames, axis=1)).argmax(axis=1)
-                nb = frame_len // 2 + 1  # rfft bins incl. Nyquist
-                for t in range(nf):
-                    for dt in range(1, fanout + 1):
-                        if t + dt < nf:
-                            lh = ((int(bins[t]) * nb + int(bins[t + dt]))
-                                  * (fanout + 1) + dt)
-                            out.append((aid, t, lh))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FINGERPRINT_SCHEMA])
+    # failed decodes are dropped here; audio_stats surfaces them
+    def kernel(aid, data):
+        _, x = decode_wav(data)
+        nf = len(x) // frame_len
+        if nf < 2:
+            return []
+        frames = x[:nf * frame_len].reshape(nf, frame_len)
+        bins = np.abs(np.fft.rfft(frames, axis=1)).argmax(axis=1)
+        nb = frame_len // 2 + 1  # rfft bins incl. Nyquist
+        out = []
+        for t in range(nf):
+            for dt in range(1, fanout + 1):
+                if t + dt < nf:
+                    lh = ((int(bins[t]) * nb + int(bins[t + dt]))
+                          * (fanout + 1) + dt)
+                    out.append((aid, t, lh))
+        return out
 
-    return audio.select("audio_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, FINGERPRINT_SCHEMA)
+    return map_bytes(audio, "audio_id", FINGERPRINT_SCHEMA, kernel)
 
 
 def dedup_audio_pairs(audio: DataFrame | None = None, *,

@@ -5,7 +5,8 @@ The reference decodes one PNG per row with torchvision
 embeddings by running the net over batches
 (``loc2vec_run.py:34-47``). The engine treats images as opaque binary
 columns with typed metadata (BASELINE.json input_hint) and crosses into
-Python exactly once per stage via Arrow-batched ``mapInPandas``:
+Python exactly once per stage: each operator is a per-row kernel run by
+:func:`.rows.map_bytes`:
 
 - :func:`decode_stats` — decode + per-image pixel statistics (the PSNR /
   caption invariants are checked here in tests),
@@ -21,19 +22,18 @@ Python exactly once per stage via Arrow-batched ``mapInPandas``:
   remaining compressed a/v codecs (mp3/aac/h264) stay stubbed — the
   sandbox has none.
 
-Corrupt rows never abort the job: failed decodes emit NULL stats and are
-quarantined by filter (dead-letter semantics, SURVEY.md §2.8).
+Corrupt rows never abort the job: ``map_bytes`` turns a failed row into
+an ok=false row with NULL stats, or drops it where the schema has no
+``ok`` column (dead-letter semantics, SURVEY.md §2.8).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..png_codec import decode_png, encode_png
+from .rows import map_bytes
 
 
 def decode_image(data: bytes) -> np.ndarray:
@@ -81,24 +81,16 @@ DECODE_SCHEMA = T.StructType([
 def decode_stats(images: DataFrame) -> DataFrame:
     """Decode the binary column batch-at-a-time; emit per-image stats.
 
-    Rows with NULL/undecodable bytes get ok=false (quarantine, not
-    failure — one corrupt image of 10^12 must not kill the job)."""
+    Rows with undecodable bytes get ok=false (quarantine, not failure —
+    one corrupt image of 10^12 must not kill the job); NULL-bytes rows
+    are filtered out before the crossing."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                    out.append((iid, True, arr.shape[0], arr.shape[1],
-                                round(float(arr.mean()), 6),
-                                round(float(arr.std()), 6)))
-                except Exception:
-                    out.append((iid, False, None, None, None, None))
-            yield pd.DataFrame(out, columns=[f.name for f in DECODE_SCHEMA])
+    def kernel(iid, data):
+        arr = decode_image(data)
+        return [(iid, True, arr.shape[0], arr.shape[1],
+                 round(float(arr.mean()), 6), round(float(arr.std()), 6))]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, DECODE_SCHEMA)
+    return map_bytes(images, "image_id", DECODE_SCHEMA, kernel)
 
 
 FEATURE_DIM = 16  # matches the reference's embedding head (loc2vec_nn.py:32)
@@ -120,34 +112,20 @@ def image_features(images: DataFrame) -> DataFrame:
     (``loc2vec_run.py:33-48``, SURVEY.md §3 E2).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data)).astype(np.float32)
-                except Exception:
-                    continue  # quarantined
-                if arr.ndim == 2:
-                    arr = arr[:, :, None].repeat(3, axis=2)
-                # 3 channels x 4-bin histogram + 4 moments = 16 dims
-                feats = []
-                for c in range(3):
-                    h, _ = np.histogram(arr[:, :, c], bins=4,
-                                        range=(0, 256))
-                    feats.extend(h / arr[:, :, c].size)
-                feats.extend([arr.mean() / 255.0, arr.std() / 255.0,
-                              arr.min() / 255.0, arr.max() / 255.0])
-                ids.append(iid)
-                vecs.append(np.asarray(feats, dtype=np.float32))
-            # an empty vecs list becomes a float64 column, which Arrow
-            # cannot convert to array<float>: a batch whose rows were
-            # all quarantined yields nothing
-            if ids:
-                yield pd.DataFrame({"image_id": ids, "embedding": vecs})
+    def kernel(iid, data):
+        arr = decode_image(data).astype(np.float32)
+        if arr.ndim == 2:
+            arr = arr[:, :, None].repeat(3, axis=2)
+        # 3 channels x 4-bin histogram + 4 moments = 16 dims
+        feats = []
+        for c in range(3):
+            h, _ = np.histogram(arr[:, :, c], bins=4, range=(0, 256))
+            feats.extend(h / arr[:, :, c].size)
+        feats.extend([arr.mean() / 255.0, arr.std() / 255.0,
+                      arr.min() / 255.0, arr.max() / 255.0])
+        return [(iid, np.asarray(feats, dtype=np.float32))]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, FEATURES_SCHEMA)
+    return map_bytes(images, "image_id", FEATURES_SCHEMA, kernel)
 
 
 RESIZE_SCHEMA = T.StructType([
@@ -161,23 +139,15 @@ RESIZE_SCHEMA = T.StructType([
 def resize_images(images: DataFrame, *, out_px: int = 32) -> DataFrame:
     """Nearest-neighbor resize, PNG re-encode (pure numpy indexing)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                except Exception:
-                    continue
-                hh, ww = arr.shape[0], arr.shape[1]
-                ri = (np.arange(out_px) * hh // out_px)
-                ci = (np.arange(out_px) * ww // out_px)
-                small = arr[np.ix_(ri, ci)]
-                out.append((iid, encode_png(small), out_px, out_px))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h"])
+    def kernel(iid, data):
+        arr = decode_image(data)
+        hh, ww = arr.shape[0], arr.shape[1]
+        ri = (np.arange(out_px) * hh // out_px)
+        ci = (np.arange(out_px) * ww // out_px)
+        small = arr[np.ix_(ri, ci)]
+        return [(iid, encode_png(small), out_px, out_px)]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, RESIZE_SCHEMA)
+    return map_bytes(images, "image_id", RESIZE_SCHEMA, kernel)
 
 
 PHASH_SCHEMA = T.StructType([
@@ -228,22 +198,13 @@ def phash_images(images: DataFrame) -> DataFrame:
     numpy — the band/bit plumbing downstream is hash-agnostic.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    h = _ahash64(decode_image(bytes(data)))
-                except Exception:
-                    continue  # quarantined
-                signed = h - (1 << 64) if h >= (1 << 63) else h
-                bands = [(h >> s) & 0xFFFF for s in (48, 32, 16, 0)]
-                out.append((iid, signed, *bands))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PHASH_SCHEMA])
+    def kernel(iid, data):
+        h = _ahash64(decode_image(data))
+        signed = h - (1 << 64) if h >= (1 << 63) else h
+        bands = [(h >> s) & 0xFFFF for s in (48, 32, 16, 0)]
+        return [(iid, signed, *bands)]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, PHASH_SCHEMA)
+    return map_bytes(images, "image_id", PHASH_SCHEMA, kernel)
 
 
 QUALITY_SCHEMA = T.StructType([
@@ -301,30 +262,16 @@ def image_quality(images: DataFrame) -> DataFrame:
     entropy > 1``): the signals are raw and deterministic, thresholds
     stay with the caller/job (run_mining --min-sharpness)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                    # degenerate tiles (< 3x3) have empty Laplacian/
-                    # Sobel slices -> NaN sharpness that would pass the
-                    # ok gate yet fail every threshold filter; such
-                    # tiles are quarantined like corrupt ones (r2
-                    # advice)
-                    if arr.shape[0] < 3 or arr.shape[1] < 3:
-                        out.append((iid, False) + (None,) * 5)
-                        continue
-                    vals = quality_signals(arr)
-                    out.append((iid, True,
-                                *(round(v, 6) for v in vals)))
-                except Exception:
-                    out.append((iid, False) + (None,) * 5)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in QUALITY_SCHEMA])
+    def kernel(iid, data):
+        arr = decode_image(data)
+        # degenerate tiles (< 3x3) have empty Laplacian/Sobel slices ->
+        # NaN sharpness that would pass the ok gate yet fail every
+        # threshold filter; such tiles are quarantined like corrupt ones
+        if arr.shape[0] < 3 or arr.shape[1] < 3:
+            raise ValueError(f"tile {arr.shape[:2]} smaller than 3x3")
+        return [(iid, True, *(round(v, 6) for v in quality_signals(arr)))]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, QUALITY_SCHEMA)
+    return map_bytes(images, "image_id", QUALITY_SCHEMA, kernel)
 
 
 BORDER_SCHEMA = T.StructType([
@@ -375,25 +322,13 @@ def detect_borders(images: DataFrame, *, tol: int = 8) -> DataFrame:
     batches end-to-end; the decode rides the same magic sniff as
     every other image operator."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                    t, b, le, r = border_box(arr, tol=tol)
-                    hw = arr.shape[0] * arr.shape[1]
-                    frac = 1.0 - ((b - t) * (r - le)) / hw
-                    out.append((iid, True, t, b, le, r,
-                                round(frac, 6)))
-                except Exception:
-                    out.append((iid, False, None, None, None, None,
-                                None))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in BORDER_SCHEMA])
+    def kernel(iid, data):
+        arr = decode_image(data)
+        t, b, le, r = border_box(arr, tol=tol)
+        frac = 1.0 - ((b - t) * (r - le)) / (arr.shape[0] * arr.shape[1])
+        return [(iid, True, t, b, le, r, round(frac, 6))]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, BORDER_SCHEMA)
+    return map_bytes(images, "image_id", BORDER_SCHEMA, kernel)
 
 
 AUGMENT_SCHEMA = T.StructType([
@@ -434,44 +369,33 @@ def augment_images(images: DataFrame, *, seed: int = 42,
     partitioning (test_images).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                except Exception:
-                    continue
-                for c in range(copies):
-                    op = _AUG_OPS[_aug_pick(f"{iid}#{c}", seed,
-                                            len(_AUG_OPS))]
-                    if op == "identity":
-                        aug = arr
-                    elif op == "fliplr":
-                        aug = arr[:, ::-1]
-                    elif op == "flipud":
-                        aug = arr[::-1, :]
-                    elif op == "rot90":
-                        aug = np.rot90(arr, 1)
-                    elif op == "rot180":
-                        aug = np.rot90(arr, 2)
-                    else:
-                        aug = np.rot90(arr, 3)
-                    aug = np.ascontiguousarray(aug)
-                    # ids always suffixed: variants are NEW rows that
-                    # must never collide with their source id; base_id
-                    # travels as its OWN column — string-splitting the
-                    # suffixed id back apart would mis-join any source
-                    # id that itself contains '#' (review r2 batch 4)
-                    out.append((f"{iid}#aug{c}", iid, op,
-                                encode_png(aug),
-                                aug.shape[1], aug.shape[0]))
-            yield pd.DataFrame(
-                out, columns=["image_id", "base_id", "aug_op", "bytes",
-                              "w", "h"])
+    def kernel(iid, data):
+        arr = decode_image(data)
+        out = []
+        for c in range(copies):
+            op = _AUG_OPS[_aug_pick(f"{iid}#{c}", seed, len(_AUG_OPS))]
+            if op == "identity":
+                aug = arr
+            elif op == "fliplr":
+                aug = arr[:, ::-1]
+            elif op == "flipud":
+                aug = arr[::-1, :]
+            elif op == "rot90":
+                aug = np.rot90(arr, 1)
+            elif op == "rot180":
+                aug = np.rot90(arr, 2)
+            else:
+                aug = np.rot90(arr, 3)
+            aug = np.ascontiguousarray(aug)
+            # ids always suffixed: variants are NEW rows that must never
+            # collide with their source id; base_id travels as its OWN
+            # column — string-splitting the suffixed id back apart would
+            # mis-join any source id that itself contains '#'
+            out.append((f"{iid}#aug{c}", iid, op, encode_png(aug),
+                        aug.shape[1], aug.shape[0]))
+        return out
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, AUGMENT_SCHEMA)
+    return map_bytes(images, "image_id", AUGMENT_SCHEMA, kernel)
 
 
 def decode_av(images: DataFrame, *, kind: str) -> DataFrame:
@@ -481,8 +405,8 @@ def decode_av(images: DataFrame, *, kind: str) -> DataFrame:
     stdlib wave + numpy (:mod:`loc2vec_spark.operators.audio`) and
     YUV4MPEG2 parses with pure numpy
     (:mod:`loc2vec_spark.operators.video`): decode, stats, features,
-    frame sampling, quarantine-on-error, all through the same
-    one-Arrow-crossing template as :func:`decode_stats`. Baseline and
+    frame sampling, quarantine-on-error, all as per-row kernels of
+    :func:`.rows.map_bytes`, like :func:`decode_stats`. Baseline and
     progressive JPEG images decode for real as well (:mod:`.jpeg`, via
     :func:`decode_image` — kind="image" is NOT stubbed; it is the
     default image path), and MP4 containers demux for real with full
@@ -502,6 +426,6 @@ def decode_av(images: DataFrame, *, kind: str) -> DataFrame:
         return video_stats(images)
     raise NotImplementedError(
         f"{kind} decoding requires external codec libraries not present "
-        "in this environment; plug a decoder into the decode_stats "
-        "mapInPandas template (see operators/audio.py and video.py for "
-        "the wav/y4m instances of exactly that swap)")
+        "in this environment; plug a decoder in as a per-row kernel of "
+        "operators.rows.map_bytes (see operators/audio.py and video.py "
+        "for the wav/y4m instances of exactly that swap)")

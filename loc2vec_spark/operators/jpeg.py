@@ -35,9 +35,9 @@ Performance shape: marker parsing and Huffman bit-reading are
 per-symbol Python (inherent to the format's serial entropy stream);
 everything block-math — dequantize, IDCT, level shift, chroma
 upsample, color transform — is one vectorized numpy pass over ALL
-blocks per component. Inside Spark this sits behind the standard
-one-Arrow-crossing mapInPandas template, one image per row, rows
-independent — throughput scales with partitions like every other
+blocks per component. Inside Spark it runs as a per-row kernel of
+``rows.map_bytes`` (one Arrow crossing, one image per row, rows
+independent) — throughput scales with partitions like every other
 decode operator.
 """
 

@@ -26,10 +26,10 @@ explicit and tested.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from .rows import map_bytes
 
 # bitrate tables, kbps; row = (version-group, layer); index 0 is
 # "free format" (unsupported -> invalid), index 15 is forbidden
@@ -210,25 +210,16 @@ def mp3_probe(audio: DataFrame) -> DataFrame:
 
     The compressed-audio counterpart of ``mp4.mp4_probe``: exact frame
     count / duration / mean bitrate / CBR-VBR verdict per file, corrupt
-    or free-format streams quarantine as ok=false. Same one-Arrow-
-    crossing template as ``images.decode_stats``."""
+    or free-format streams quarantine as ok=false. One Arrow crossing:
+    a per-row kernel of :func:`.rows.map_bytes`."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, data in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    m = parse_mp3(bytes(data))
-                    out.append((aid, True, m["version"], m["layer"],
-                                m["rate"], m["channels"], m["n_frames"],
-                                round(m["duration_s"], 6),
-                                m["bitrate_kbps"], m["vbr"]))
-                except Exception:
-                    out.append((aid, False) + (None,) * 8)
-            yield pd.DataFrame(out, columns=[f.name for f in PROBE_SCHEMA])
+    def kernel(aid, data):
+        m = parse_mp3(data)
+        return [(aid, True, m["version"], m["layer"], m["rate"],
+                 m["channels"], m["n_frames"], round(m["duration_s"], 6),
+                 m["bitrate_kbps"], m["vbr"])]
 
-    return audio.select("audio_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, PROBE_SCHEMA)
+    return map_bytes(audio, "audio_id", PROBE_SCHEMA, kernel)
 
 
 def synth_mp3_bytes(n_frames: int = 8, *, bitrate_kbps: int = 128,

@@ -37,13 +37,12 @@ to cover the >4 GiB-file branch of the parser.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from .jpeg import decode_jpeg, encode_jpeg
+from .rows import map_bytes
 
 # fourccs whose samples are self-contained JFIF images (decodable here)
 _JPEG_CODECS = {"jpeg", "mjpa", "mjpb"}
@@ -426,33 +425,20 @@ def mp4_probe(videos: DataFrame) -> DataFrame:
     pixels (MJPEG tracks). The 100-TB ingest routing operator: corrupt
     containers quarantine as ok=false, avc1/hev1 land decodable=false
     and route to an external transcode pool, MJPEG routes straight into
-    :func:`.video.video_stats`. Same one-Arrow-crossing template as
-    ``images.decode_stats``."""
+    :func:`.video.video_stats`. A per-row kernel of
+    :func:`.rows.map_bytes`, like ``images.decode_stats``."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for vid, data in zip(pdf["video_id"], pdf["bytes"]):
-                try:
-                    meta = parse_mp4(bytes(data))
-                    vt = next((t for t in meta["tracks"]
-                               if t["handler"] == "vide"),
-                              meta["tracks"][0])
-                    dur = vt["duration_s"]
-                    kbps = (vt["media_bytes"] * 8 / dur / 1000.0
-                            if dur > 0 else None)
-                    out.append((vid, True, meta["brand"], vt["codec"],
-                                vt["w"], vt["h"], vt["n_samples"],
-                                vt["fps"], round(dur, 6),
-                                # `is not None`: a measured ZERO bitrate
-                                # (all-empty samples) is a value, not
-                                # the duration<=0 unmeasurable case
-                                round(kbps, 3) if kbps is not None
-                                else None,
-                                vt["codec"] in _JPEG_CODECS))
-                except Exception:
-                    out.append((vid, False) + (None,) * 9)
-            yield pd.DataFrame(out, columns=[f.name for f in PROBE_SCHEMA])
+    def kernel(vid, data):
+        meta = parse_mp4(data)
+        vt = next((t for t in meta["tracks"] if t["handler"] == "vide"),
+                  meta["tracks"][0])
+        dur = vt["duration_s"]
+        kbps = vt["media_bytes"] * 8 / dur / 1000.0 if dur > 0 else None
+        return [(vid, True, meta["brand"], vt["codec"], vt["w"], vt["h"],
+                 vt["n_samples"], vt["fps"], round(dur, 6),
+                 # `is not None`: a measured ZERO bitrate (all-empty
+                 # samples) is a value, not the duration<=0 case
+                 round(kbps, 3) if kbps is not None else None,
+                 vt["codec"] in _JPEG_CODECS)]
 
-    return videos.select("video_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, PROBE_SCHEMA)
+    return map_bytes(videos, "video_id", PROBE_SCHEMA, kernel)

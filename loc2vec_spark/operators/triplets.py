@@ -104,61 +104,8 @@ def _in_ring_cells(c: DataFrame, a: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# J2: positive = nearest in-ring neighbor (k=1 degenerate kNN)
-# ---------------------------------------------------------------------------
-
-def positive_join(pts: DataFrame, *, id_col: str, emb_col: str,
-                  cell_col: str, res: int, dim: int) -> DataFrame:
-    """(anchor_id, positive_id): the single nearest in-ring neighbor,
-    tie-broken by id (FIXTURES.md triplets_golden schema)."""
-    top1 = knn_topk(pts, id_col=id_col, emb_col=emb_col, cell_col=cell_col,
-                    res=res, dim=dim, k=1, ring=1, include_dist=False)
-    return top1.select(F.col("anchor_id"),
-                       F.col("neighbor_id").alias("positive_id"))
-
-
-# ---------------------------------------------------------------------------
 # J4: negative sampling
 # ---------------------------------------------------------------------------
-
-def negative_sample_farcell(pts: DataFrame, *, id_col: str, cell_col: str,
-                            res: int, n_neg: int = 5, ring: int = 1,
-                            seed: int = 42, n_buckets: int = 64) -> DataFrame:
-    """Seeded far-cell negatives: for each anchor, ``n_neg`` rows whose cell
-    lies OUTSIDE the anchor's k-ring (Chebyshev grid distance > ring, with
-    longitude wraparound).
-
-    Bucket-join variant: anchors and candidates hash into ``n_buckets``
-    buckets and join bucket-to-bucket; each anchor sees ~N/B candidates.
-    This is O(N^2/B) — it matches the SQL oracle exactly and is right for
-    oracle-scale tables; the production path at 10^12 rows is
-    :func:`negative_sample_farcell_pooled` (broadcast pool, linear in N).
-    Deterministic: bucket assignment and pick order are integer id hashes.
-    """
-    n = 1 << res
-    # grid coords and hashes are computed ONCE per input row (narrow,
-    # pre-join) — never re-derived on the O(N^2/B) pair rows
-    a = (pts.select(F.col(id_col).alias("anchor_id"),
-                    F.expr(cells.cell_i_sql(cell_col)).alias("ai"),
-                    F.expr(cells.cell_j_sql(cell_col)).alias("aj"),
-                    _id_hash_col(id_col, seed, n_buckets).alias("bkt")))
-    c = (pts.select(F.col(id_col).alias("neg_id"),
-                    F.expr(cells.cell_i_sql(cell_col)).alias("ni"),
-                    F.expr(cells.cell_j_sql(cell_col)).alias("nj"),
-                    _id_hash_col(id_col, seed + 1, n_buckets).alias("bkt"),
-                    _id_hash_col(id_col, seed + 2,
-                                 1_000_000_007).alias("ord")))
-    # Chebyshev grid distance with lon wrap, on precomputed int columns
-    far = (f"GREATEST(LEAST(ABS(ai - ni), {n} - ABS(ai - ni)), "
-           f"ABS(aj - nj)) > {ring}")
-    cand = (a.join(c, "bkt")
-             .filter(F.col("anchor_id") != F.col("neg_id"))
-             .filter(F.expr(far)))
-    w = Window.partitionBy("anchor_id").orderBy("ord", "neg_id")
-    return (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= n_neg)
-                .select("anchor_id", "rank", "neg_id"))
-
 
 def _id_hash_col(colname: str, seed: int, mod: int):
     """Portable deterministic hash of an id column -> [0, mod).
@@ -212,31 +159,6 @@ def negative_sample_compat(pts: DataFrame, *, id_col: str,
                  Window.orderBy("neg_id")) - 1)
     return (df.join(idx, "neg_rn", "inner")
               .select("anchor_id", "neg_id"))
-
-
-# ---------------------------------------------------------------------------
-# full triplet candidate table (E1 re-expressed: J1+J2+J4)
-# ---------------------------------------------------------------------------
-
-def triplet_candidates(pts: DataFrame, *, id_col: str, emb_col: str,
-                       cell_col: str, res: int, dim: int,
-                       n_neg: int = 5, seed: int = 42) -> DataFrame:
-    """(anchor_id, cell, positive_id, negative_ids[n_neg]) — the engine's
-    parity output for the reference's Tensor_Loader triplet assembly."""
-    pos = positive_join(pts, id_col=id_col, emb_col=emb_col,
-                        cell_col=cell_col, res=res, dim=dim)
-    neg = negative_sample_farcell_pooled(
-        pts, id_col=id_col, cell_col=cell_col, res=res, n_neg=n_neg,
-        seed=seed)
-    negs = (neg.groupBy("anchor_id")
-               .agg(F.sort_array(F.collect_list(
-                   F.struct("rank", "neg_id"))).alias("s"))
-               .select("anchor_id",
-                       F.col("s.neg_id").alias("negative_ids")))
-    anchors = pts.select(F.col(id_col).alias("anchor_id"),
-                         F.col(cell_col).alias("cell"))
-    return (anchors.join(pos, "anchor_id", "left")
-                   .join(negs, "anchor_id", "left"))
 
 
 # ---------------------------------------------------------------------------
@@ -383,9 +305,10 @@ def negative_sample_farcell_pooled(pts: DataFrame, *, id_col: str,
                                    ) -> DataFrame:
     """Far-cell negatives, linear-in-N scale path.
 
-    The bucket-join variant (:func:`negative_sample_farcell`) materializes
-    N^2/B candidate pairs — quadratic, fine for oracle-scale tables, fatal
-    at 10^12 rows. Here a fixed-size seeded pool (~``pool_size`` rows,
+    A bucket join of anchors against all rows (the ``negative_farcell``
+    oracle in :mod:`loc2vec_spark.queries`) materializes N^2/B candidate
+    pairs — quadratic, fine for oracle-scale tables, fatal at 10^12
+    rows. Here a fixed-size seeded pool (~``pool_size`` rows,
     chosen by a deterministic id-hash threshold against an exact count) is
     broadcast; each anchor meets only ``fanout * n_neg`` pool members
     (bucket equi-join against the broadcast side -> no shuffle at all),

@@ -14,8 +14,8 @@ and Motion-JPEG tracks decode for real through the repo JPEG codec
 (:mod:`.mp4`); compressed codecs (h264/hevc/...) demux + probe but
 refuse pixel decode -> quarantine, honestly.
 
-All operators use the same one-Arrow-crossing ``mapInPandas`` template
-as ``images.decode_stats``; corrupt clips quarantine via ok=false rows
+All operators are per-row kernels of :func:`.rows.map_bytes`, like
+``images.decode_stats``; corrupt clips quarantine via ok=false rows
 (or are silently skipped where the output is per-frame), never abort.
 
 Schema mirror of the images input_hint: (video_id string, bytes binary,
@@ -24,13 +24,12 @@ w int, h int, n_frames int, fps double, fmt string).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..png_codec import encode_png
+from .rows import map_bytes
 
 _MAGIC = b"YUV4MPEG2"
 
@@ -150,26 +149,15 @@ def video_stats(videos: DataFrame) -> DataFrame:
     pipeline cannot produce, used downstream to filter slideshows /
     static filler out of a training corpus."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for vid, data in zip(pdf["video_id"], pdf["bytes"]):
-                try:
-                    fps, fr = decode_video(bytes(data))
-                    n, h, w = fr.shape
-                    motion = float(np.mean(np.abs(
-                        np.diff(fr.astype(np.int16), axis=0)))) \
-                        if n > 1 else 0.0
-                    out.append((vid, True, w, h, n, fps, n / fps,
-                                round(float(fr.mean()), 6),
-                                round(motion, 6)))
-                except Exception:
-                    out.append((vid, False, None, None, None, None,
-                                None, None, None))
-            yield pd.DataFrame(out, columns=[f.name for f in STATS_SCHEMA])
+    def kernel(vid, data):
+        fps, fr = decode_video(data)
+        n, h, w = fr.shape
+        motion = float(np.mean(np.abs(
+            np.diff(fr.astype(np.int16), axis=0)))) if n > 1 else 0.0
+        return [(vid, True, w, h, n, fps, n / fps,
+                 round(float(fr.mean()), 6), round(motion, 6))]
 
-    return videos.select("video_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, STATS_SCHEMA)
+    return map_bytes(videos, "video_id", STATS_SCHEMA, kernel)
 
 
 FRAMES_SCHEMA = T.StructType([
@@ -194,22 +182,13 @@ def frame_sample(videos: DataFrame, *, every_s: float = 1.0,
     data-dependent surprise). Corrupt clips are skipped (they surface
     in :func:`video_stats` quarantine instead)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for vid, data in zip(pdf["video_id"], pdf["bytes"]):
-                try:
-                    fps, fr = decode_video(bytes(data))
-                except Exception:
-                    continue
-                step = max(1, int(round(every_s * fps)))
-                for fno in range(0, fr.shape[0], step)[:max_frames]:
-                    out.append((f"{vid}#{fno}", vid, fno, fno / fps,
-                                encode_png(fr[fno])))
-            yield pd.DataFrame(out, columns=[f.name for f in FRAMES_SCHEMA])
+    def kernel(vid, data):
+        fps, fr = decode_video(data)
+        step = max(1, int(round(every_s * fps)))
+        return [(f"{vid}#{fno}", vid, fno, fno / fps, encode_png(fr[fno]))
+                for fno in range(0, fr.shape[0], step)[:max_frames]]
 
-    return videos.select("video_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, FRAMES_SCHEMA)
+    return map_bytes(videos, "video_id", FRAMES_SCHEMA, kernel)
 
 
 FEATURE_DIM = 16
@@ -227,34 +206,25 @@ def video_features(videos: DataFrame) -> DataFrame:
     ``images.image_features`` — the contract is the dataflow; a learned
     video encoder is a one-function swap."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for vid, data in zip(pdf["video_id"], pdf["bytes"]):
-                try:
-                    fps, fr = decode_video(bytes(data))
-                except Exception:
-                    continue  # quarantined
-                hist, _ = np.histogram(fr, bins=8, range=(0, 256))
-                feats = list(hist / fr.size)
-                series = fr.mean(axis=(1, 2))
-                feats.extend([float(series.mean()) / 255.0,
-                              float(series.std()) / 255.0,
-                              float(series.min()) / 255.0,
-                              float(series.max()) / 255.0])
-                motion = float(np.mean(np.abs(
-                    np.diff(fr.astype(np.int16), axis=0)))) \
-                    if fr.shape[0] > 1 else 0.0
-                feats.extend([motion / 255.0,
-                              float(fr.std()) / 255.0,
-                              float(np.log1p(fr.shape[0] / fps)),
-                              fps / 100.0])
-                ids.append(vid)
-                vecs.append(np.asarray(feats, dtype=np.float32))
-            yield pd.DataFrame({"video_id": ids, "embedding": vecs})
+    def kernel(vid, data):
+        fps, fr = decode_video(data)
+        hist, _ = np.histogram(fr, bins=8, range=(0, 256))
+        feats = list(hist / fr.size)
+        series = fr.mean(axis=(1, 2))
+        feats.extend([float(series.mean()) / 255.0,
+                      float(series.std()) / 255.0,
+                      float(series.min()) / 255.0,
+                      float(series.max()) / 255.0])
+        motion = float(np.mean(np.abs(
+            np.diff(fr.astype(np.int16), axis=0)))) \
+            if fr.shape[0] > 1 else 0.0
+        feats.extend([motion / 255.0,
+                      float(fr.std()) / 255.0,
+                      float(np.log1p(fr.shape[0] / fps)),
+                      fps / 100.0])
+        return [(vid, np.asarray(feats, dtype=np.float32))]
 
-    return videos.select("video_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, FEATURES_SCHEMA)
+    return map_bytes(videos, "video_id", FEATURES_SCHEMA, kernel)
 
 
 def synth_video_pdf(n: int = 20, w: int = 32, h: int = 24,

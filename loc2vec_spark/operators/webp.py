@@ -35,10 +35,10 @@ semantics exact (a corrupt file must never read as
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from .rows import map_bytes
 
 
 def parse_webp(data: bytes) -> dict:
@@ -143,24 +143,14 @@ def webp_probe(images: DataFrame) -> DataFrame:
     """Container probe over a binary WebP column — the image
     counterpart of ``mp3_probe``/``mp4_probe``: route/size/animation
     metadata per file, corrupt rows quarantine as ok=false. One Arrow
-    crossing, same template as ``images.decode_stats``."""
+    crossing: a per-row kernel of :func:`.rows.map_bytes`."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    m = parse_webp(bytes(data))
-                    out.append((iid, True, m["variant"], m["w"],
-                                m["h"], m["alpha"], m["animated"],
-                                m["n_frames"]))
-                except Exception:
-                    out.append((iid, False) + (None,) * 6)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PROBE_SCHEMA])
+    def kernel(iid, data):
+        m = parse_webp(data)
+        return [(iid, True, m["variant"], m["w"], m["h"], m["alpha"],
+                 m["animated"], m["n_frames"])]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, PROBE_SCHEMA)
+    return map_bytes(images, "image_id", PROBE_SCHEMA, kernel)
 
 
 # ---------------------------------------------------------------------------

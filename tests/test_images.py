@@ -1,5 +1,7 @@
 """Multimodal binary-column operators (S3/E2) + packaging tests."""
 
+import importlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -40,12 +42,50 @@ def test_decode_quarantines_corrupt_bytes(spark):
     assert not bool(out.set_index("image_id").loc["bad", "ok"])
 
 
-def test_image_features_all_corrupt_batch_yields_no_rows(spark):
-    """A batch whose every row fails to decode (a resume can feed one
-    such bucket alone) quarantines its rows instead of failing."""
-    df = spark.createDataFrame([("bad", bytearray(b"garbage"))],
-                               "image_id STRING, bytes BINARY")
-    assert img_ops.image_features(df).count() == 0
+# every per-row bytes operator: (module.function, id column, whether a
+# failed row stays as ok=false or is dropped)
+_ALL_CORRUPT_CASES = [
+    ("images.decode_stats", "image_id", True),
+    ("images.image_quality", "image_id", True),
+    ("images.detect_borders", "image_id", True),
+    ("audio.audio_stats", "audio_id", True),
+    ("video.video_stats", "video_id", True),
+    ("mp3.mp3_probe", "audio_id", True),
+    ("aac.aac_probe", "audio_id", True),
+    ("webp.webp_probe", "image_id", True),
+    ("mp4.mp4_probe", "video_id", True),
+    ("images.image_features", "image_id", False),
+    ("images.resize_images", "image_id", False),
+    ("images.phash_images", "image_id", False),
+    ("images.augment_images", "image_id", False),
+    ("audio.audio_features", "audio_id", False),
+    ("video.video_features", "video_id", False),
+    ("video.frame_sample", "video_id", False),
+    ("avdedup.audio_fingerprints", "audio_id", False),
+]
+
+
+@pytest.mark.parametrize("op, id_col, keeps_failed", _ALL_CORRUPT_CASES,
+                         ids=[c[0] for c in _ALL_CORRUPT_CASES])
+def test_all_corrupt_batch_quarantines(spark, op, id_col, keeps_failed):
+    """A batch whose every row fails (a resume can feed one such bucket
+    alone) quarantines its rows instead of failing the job: one ok=false
+    row per input with every other field NULL, or no row at all."""
+    mod, name = op.split(".")
+    fn = getattr(importlib.import_module(
+        f"loc2vec_spark.operators.{mod}"), name)
+    ids = ["bad0", "bad1", "bad2"]
+    df = spark.createDataFrame(
+        [(i, bytearray(b"garbage")) for i in ids],
+        f"{id_col} STRING, bytes BINARY").coalesce(1)
+    rows = fn(df).collect()
+    if not keeps_failed:
+        assert rows == []
+        return
+    assert sorted(r[id_col] for r in rows) == ids
+    for r in rows:
+        assert r["ok"] is False
+        assert all(v is None for v in r[2:]), r
 
 
 def test_image_features_deterministic_and_fixes_id_alignment(spark, images):

@@ -48,13 +48,16 @@ def numpy_knn(pdf, k=3, ring=1):
     return sorted(out)
 
 
-def test_knn_topk_matches_numpy(pts, pts_pdf):
+@pytest.mark.parametrize("k", [1, 3])
+def test_knn_topk_matches_numpy(pts, pts_pdf, k):
+    """k=1 is the J2 positive: the single nearest in-ring neighbor,
+    tie-broken by id."""
     got = triplets.knn_topk(pts, id_col="id", emb_col="emb",
                             cell_col="cell", res=RES, dim=DIM,
-                            k=3, ring=1, include_dist=False)
+                            k=k, ring=1, include_dist=False)
     got_rows = sorted((r.anchor_id, r.rank, r.neighbor_id)
                       for r in got.collect())
-    assert got_rows == numpy_knn(pts_pdf, k=3, ring=1)
+    assert got_rows == numpy_knn(pts_pdf, k=k, ring=1)
 
 
 def test_knn_deterministic_across_parallelism(pts):
@@ -65,16 +68,8 @@ def test_knn_deterministic_across_parallelism(pts):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_positive_join_is_top1(pts, pts_pdf):
-    pos = triplets.positive_join(pts, id_col="id", emb_col="emb",
-                                 cell_col="cell", res=RES, dim=DIM)
-    expect = {(a, n) for a, r, n in numpy_knn(pts_pdf, k=1, ring=1)}
-    got = {(r.anchor_id, r.positive_id) for r in pos.collect()}
-    assert got == expect
-
-
 def test_negative_farcell_outside_ring(pts, pts_pdf):
-    neg = triplets.negative_sample_farcell(
+    neg = triplets.negative_sample_farcell_pooled(
         pts, id_col="id", cell_col="cell", res=RES, n_neg=3, seed=42)
     rows = neg.collect()
     assert len(rows) > 0
@@ -86,11 +81,11 @@ def test_negative_farcell_outside_ring(pts, pts_pdf):
 
 
 def test_negative_farcell_deterministic(pts):
-    a = triplets.negative_sample_farcell(pts, id_col="id", cell_col="cell",
-                                         res=RES, n_neg=3, seed=7)
-    b = triplets.negative_sample_farcell(pts.repartition(9), id_col="id",
-                                         cell_col="cell", res=RES,
-                                         n_neg=3, seed=7)
+    a = triplets.negative_sample_farcell_pooled(
+        pts, id_col="id", cell_col="cell", res=RES, n_neg=3, seed=7)
+    b = triplets.negative_sample_farcell_pooled(
+        pts.repartition(9), id_col="id", cell_col="cell", res=RES,
+        n_neg=3, seed=7)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -114,18 +109,6 @@ def test_negative_compat_contiguous_blocks(spark):
         diffs = np.diff(grp.n_rn.to_numpy())
         assert np.all(diffs == 1), (b, grp)
         assert 0 <= grp.n_rn.min() and grp.n_rn.max() < n
-
-
-def test_triplet_candidates_schema(pts):
-    tc = triplets.triplet_candidates(pts, id_col="id", emb_col="emb",
-                                     cell_col="cell", res=RES, dim=DIM,
-                                     n_neg=3)
-    pdf = tc.toPandas()
-    assert set(pdf.columns) == {"anchor_id", "cell", "positive_id",
-                                "negative_ids"}
-    assert len(pdf) == N
-    with_neg = pdf[pdf.negative_ids.notna()]
-    assert (with_neg.negative_ids.map(len) <= 3).all()
 
 
 def test_spatial_positive_identical_across_join_salt(pts):
