@@ -11,7 +11,7 @@ Reimplements the query / data-processing capabilities of the reference
 - pure-stdlib PNG codec for binary image columns
   (:mod:`loc2vec_spark.png_codec`),
 - training-data pipeline ops: dedup, similarity search, text analysis
-  (:mod:`loc2vec_spark.operators.dedup` etc.).
+  (:mod:`loc2vec_spark.queries_text` etc.).
 
 Everything is DataFrame-first: Catalyst expressions where possible,
 Arrow-vectorized pandas UDFs where not, no per-row Python, no RDDs.

@@ -10,9 +10,8 @@ Chosen over S2's cube-face Hilbert layout because every operation here is a
 handful of integer/floor expressions — which means (a) the hot path is a pure
 Catalyst expression tree (whole-stage codegen, no Python), and (b) the exact
 same formula text runs in DuckDB for the correctness oracle. The API mirrors
-H3/S2 (``latlon_to_cell``, ``cell_to_parent``, ``kring``); the real-H3
-swap-in exists as :mod:`loc2vec_spark.cells_h3` (import-gated — pandas-UDF
-Column face, parity-tested against the h3 library where installed).
+H3/S2 (``latlon_to_cell``, ``cell_to_parent``, ``kring``), so a real-H3
+backend can later stand behind the same names.
 
 Cell id layout (single int64, always >= 0, sortable by resolution):
 
@@ -250,27 +249,15 @@ def parent_sql(cell_expr: str, res: int, parent_res: int) -> str:
     return f"(CAST({parent_res} AS BIGINT) * {_POW2_58} + {pj} * {_POW2_29} + {pi})"
 
 
-def ij_to_quadkey(i, j, res: int):
-    """Vectorized quadkey string (Bing-maps/slippy-tile interop id):
-    base-4 digits msb-first, digit = 2*j_bit + i_bit, so a parent cell's
-    quadkey is a strict PREFIX of every child's — range scans by prefix
-    are hierarchy queries. Note the engine's j axis is south-origin
-    (j=0 at lat -90); an exporter targeting Bing's top-left origin
-    flips j to (2^res - 1 - j) first."""
-    i = np.asarray(i, dtype=np.int64)
-    j = np.asarray(j, dtype=np.int64)
-    digits = [((j >> s) & 1) * 2 + ((i >> s) & 1)
-              for s in range(res - 1, -1, -1)]
-    out = np.full(i.shape, "", dtype=object)
-    for d in digits:
-        out = np.char.add(out.astype(str), d.astype(str))
-    return out.astype(str)
-
-
 def quadkey_sql(i_expr: str, j_expr: str, res: int) -> str:
-    """SQL text for the quadkey string from grid-coord expressions —
-    portable bit extraction (FLOOR-divide + %2, no bit operators) and
-    a 4-way CASE per level (no CAST-to-string dialect divergence)."""
+    """SQL text for the quadkey string (Bing-maps/slippy-tile interop id)
+    from grid-coord expressions: base-4 digits msb-first, digit =
+    2*j_bit + i_bit, so a parent cell's quadkey is a strict PREFIX of
+    every child's. Portable bit extraction (FLOOR-divide + %2, no bit
+    operators) and a 4-way CASE per level (no CAST-to-string dialect
+    divergence). The engine's j axis is south-origin (j=0 at lat -90);
+    an exporter targeting Bing's top-left origin flips j to
+    (2^res - 1 - j) first."""
     parts = []
     for k in range(res):
         s = 1 << (res - 1 - k)
@@ -416,8 +403,8 @@ def choose_resolution(df, lat_col: str, lon_col: str, *,
     """Pick the resolution whose mean occupied-cell size is closest to
     ``target_rows_per_cell`` (ties -> finer).
 
-    The third planner-like driver utility next to the salt-factor chooser
-    (lineage.salted) and the broadcast sizer (sizing.py): too-coarse cells
+    A planner-like driver utility next to the salt-factor chooser
+    (lineage.salted): too-coarse cells
     skew the per-cell work (rasterize/kNN candidate blowup), too-fine
     cells drown in task overhead and tiny files. One distributed pass
     measures ALL candidate resolutions at once — each res is an

@@ -111,7 +111,7 @@ def write_partitioned(df: DataFrame, out_dir: str, *, cell_col: str,
     # partition=null row would be dropped-field JSON that poisons every
     # later done_partitions()/resume int() parse (review r2). They are
     # therefore rewritten on every resume — quarantine rows belong in a
-    # dead-letter sink (streaming.quarantine_split), not here.
+    # dead-letter sink, not here.
     stats = (df.filter(F.col(cell_col).isNotNull())
                .groupBy(cell_col)
                .agg(F.count("*").alias("rows"),

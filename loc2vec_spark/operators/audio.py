@@ -7,9 +7,7 @@ however, needs none — the container format parses with stdlib ``wave``
 path: decode, per-clip stats, and fixed-dim spectral features, all
 per-row kernels of :func:`.rows.map_bytes` like ``images.decode_stats``
 (corrupt clips quarantine via ok=false, never abort). Compressed-audio
-SAMPLE decode (mp3/aac synthesis) remains honestly stubbed, but MP3
-container metadata parses for real — exact frame walk, duration,
-CBR/VBR, Xing header — in :mod:`.mp3` (``mp3_probe``); plugging a real
+SAMPLE decode (MP3, AAC) remains honestly stubbed; plugging a real
 sample decoder in is a one-function swap behind this same operator
 surface.
 

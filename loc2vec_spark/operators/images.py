@@ -19,8 +19,8 @@ Python exactly once per stage: each operator is a per-row kernel run by
   WAV (``operators/audio.py``) and YUV4MPEG2 (``operators/video.py``);
   baseline JPEG decodes for real too (``operators/jpeg.py``, pure
   numpy Huffman+IDCT) via :func:`decode_image`'s magic sniff; the
-  remaining compressed a/v codecs (mp3/aac/h264) stay stubbed — the
-  sandbox has none.
+  remaining compressed a/v codecs (MP3, AAC, H.264) stay stubbed: the
+  engine ships no decoder for them.
 
 Corrupt rows never abort the job: ``map_bytes`` turns a failed row into
 an ok=false row with NULL stats, or drops it where the schema has no
@@ -412,11 +412,11 @@ def decode_av(images: DataFrame, *, kind: str) -> DataFrame:
     default image path), and MP4 containers demux for real with full
     Motion-JPEG pixel decode (:mod:`.mp4`, routed via
     ``video.decode_video``'s magic sniff). The remaining compressed
-    a/v codecs (mp3/aac/h264 bitstream decode) are honest stubs:
-    those libraries aren't in this container — containers/metadata
-    parse for real (``mp4.mp4_probe``, ``mp3.mp3_probe``,
-    ``aac.aac_probe``), pixels/samples quarantine; plugging a codec in
-    is a one-function swap behind the same operator surface.
+    a/v codecs (MP3, AAC, H.264 bitstream decode) are honest stubs:
+    the engine ships no decoder for them. MP4 containers still parse
+    for real (``mp4.mp4_probe``) while their H.264 pixels quarantine;
+    plugging a codec in is a one-function swap behind the same operator
+    surface.
     """
     if kind == "audio":
         from .audio import audio_stats

@@ -1,7 +1,8 @@
 """Bucketed range (interval-containment) join.
 
-The second classic temporal operator Spark's API lacks next to
-:mod:`.asof`: match point rows to interval rows with
+The second classic temporal operator Spark's API lacks next to the
+as-of join (the registered ``asof_events`` query): match point rows to
+interval rows with
 ``start <= ts <= end`` per key. A naive ``ON ts BETWEEN start AND end``
 theta join plans as BroadcastNestedLoopJoin (per-key cross product) —
 quadratic in a hot key's history. The scale formulation buckets time:

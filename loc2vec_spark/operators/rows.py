@@ -1,7 +1,7 @@
 """One per-row runner for every binary-column operator.
 
-Each media operator (images, audio, video, the mp3/aac/webp/mp4 probes,
-audio fingerprints) is a per-row kernel over an ``(id, bytes)`` frame;
+Each media operator (images, audio, video, the webp/mp4 probes, audio
+fingerprints) is a per-row kernel over an ``(id, bytes)`` frame;
 :func:`map_bytes` owns the Arrow crossing they all share — one
 ``mapInPandas`` per operator, a batch loop, quarantine on error — so
 the crossing and its failure policy live in one place.

@@ -11,7 +11,7 @@ within spatially-plausible blocks.
 Also re-expresses the reference's triplet assembly
 (``data_loading.py:104-113``): positive = nearest in-ring neighbor (J2 as a
 cell-neighbor join), negative = seeded far-cell sample (J4; the reference's
-contiguous-block hack is reproduced exactly in ``compat`` mode).
+contiguous-block hack is the registered ``negative_compat`` query).
 
 Determinism: every ordering is tie-broken by id, every random pick is a
 seeded integer hash — output is identical at any parallelism (the scaling
@@ -28,12 +28,6 @@ from .geo import kring_explode
 
 # portable multiplicative hash (same text runs in DuckDB for the oracle)
 _KNUTH = 2654435761
-
-# negative_sample_compat ceiling: the reference runs at ~10^4-10^5 images
-# (single torch process); its compat re-expression keeps the reference's
-# global order — a single-task window — so it refuses inputs where that
-# would become a straggler instead of silently degrading (VERDICT r1).
-_COMPAT_MAX_ROWS = 5_000_000
 
 
 def _hash_sql(expr: str, seed: int, mod: int) -> str:
@@ -116,49 +110,6 @@ def _id_hash_col(colname: str, seed: int, mod: int):
     e = (f"CAST(REGEXP_REPLACE(CAST({colname} AS STRING), '[^0-9]', '') "
          f"AS BIGINT)")
     return F.expr(_hash_sql(f"COALESCE({e}, 0)", seed, mod))
-
-
-def negative_sample_compat(pts: DataFrame, *, id_col: str,
-                           batch_size: int = 16,
-                           seed: int = 42) -> DataFrame:
-    """Reference-compat negatives (``data_loading.py:109-112``): order rows
-    by id, cut into fixed batches (remainder DROPPED, ``:101-102``), and for
-    batch b pair position p with row [r_b + p] where r_b is a seeded offset
-    in [0, N - batch_size] — the reference's random contiguous block, made
-    deterministic by seeding r_b with a hash of b.
-
-    Output: (anchor_id, neg_id).
-
-    COMPAT MODE ONLY — not a scale path: the global ``row_number`` runs
-    as a single task (the reference's semantics are inherently a global
-    order). Inputs above ``_COMPAT_MAX_ROWS`` raise; scale jobs use
-    :func:`negative_sample_farcell_pooled` (linear, partitioned).
-    """
-    w = Window.orderBy("anchor_id")
-    df = pts.select(F.col(id_col).alias("anchor_id")) \
-            .withColumn("rn", F.row_number().over(w) - 1)
-    total = df.count()
-    if total > _COMPAT_MAX_ROWS:
-        raise ValueError(
-            f"negative_sample_compat is reference-compat only (global "
-            f"single-task window); got {total} rows > "
-            f"{_COMPAT_MAX_ROWS}. Use negative_sample_farcell_pooled "
-            f"for scale runs.")
-    n_batches = total // batch_size  # remainder drop (W4 compat)
-    if n_batches == 0:
-        return df.select("anchor_id").limit(0) \
-                 .withColumn("neg_id", F.col("anchor_id"))
-    hi = total - batch_size + 1
-    df = df.filter(F.col("rn") < n_batches * batch_size)
-    df = (df.withColumn("b", F.floor(F.col("rn") / batch_size))
-            .withColumn("p", F.col("rn") % batch_size)
-            .withColumn("r", F.expr(_hash_sql("b", seed, hi)))
-            .withColumn("neg_rn", F.col("r") + F.col("p")))
-    idx = pts.select(F.col(id_col).alias("neg_id")) \
-             .withColumn("neg_rn", F.row_number().over(
-                 Window.orderBy("neg_id")) - 1)
-    return (df.join(idx, "neg_rn", "inner")
-              .select("anchor_id", "neg_id"))
 
 
 # ---------------------------------------------------------------------------

@@ -6,9 +6,8 @@ cannot pixel-decode: the VP8 (lossy) payload needs a full boolean
 arithmetic decoder + loop filter and VP8L (lossless) a meta-Huffman
 + LZ77 + 4-transform pipeline — real codec libraries, out of scope
 for the stdlib/numpy rule the other five formats meet. This module
-gives WebP the SAME treatment as compressed audio/video
-(``mp3.mp3_probe``, ``aac.aac_probe``, ``mp4.mp4_probe``): the
-container and every payload HEADER parse for real, so a 10^12-row
+gives WebP the SAME treatment as compressed video (``mp4.mp4_probe``):
+the container and every payload HEADER parse for real, so a 10^12-row
 ingest can route, size-filter, dedup-by-metadata, and quarantine
 WebP rows correctly — and plugging a pixel decoder in later is a
 one-function swap behind the same operator surface.
@@ -141,7 +140,7 @@ PROBE_SCHEMA = T.StructType([
 
 def webp_probe(images: DataFrame) -> DataFrame:
     """Container probe over a binary WebP column — the image
-    counterpart of ``mp3_probe``/``mp4_probe``: route/size/animation
+    counterpart of ``mp4_probe``: route/size/animation
     metadata per file, corrupt rows quarantine as ok=false. One Arrow
     crossing: a per-row kernel of :func:`.rows.map_bytes`."""
 
@@ -155,8 +154,7 @@ def webp_probe(images: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # deterministic fixture synthesis (tests + fuzz seeds; headers are
-# real per spec, payloads past the headers are opaque filler exactly
-# like mp3/aac's synth fixtures)
+# real per spec, payloads past the headers are opaque filler)
 # ---------------------------------------------------------------------------
 
 def synth_webp_bytes(*, variant: str = "lossy", w: int = 64,

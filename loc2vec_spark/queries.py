@@ -830,8 +830,7 @@ _reg("events_sessionize", Q(
     # cast is an identity relabel and matches DuckDB's naive epoch_us
     spark_sql=_sessionize_sql("unix_micros(CAST(ts AS TIMESTAMP))"),
     duck_sql=_sessionize_sql("epoch_us(ts)"),
-    doc="gap-based session windows (lag + running-sum formulation; the "
-        "streaming face is streaming.sessionize_stream)"))
+    doc="gap-based session windows (lag + running-sum formulation)"))
 
 
 # ===========================================================================
@@ -864,9 +863,9 @@ from . import queries_geo  # noqa: E402  (registers pip_exact)
 
 def _asof_sql(base: int) -> str:
     """Inclusive backward as-of join via the union-tag + last_value
-    window (operators/asof.py is the DataFrame face; the formulation —
-    ONE shuffle of |L|+|R| rows, no range-join blowup — is the same).
-    Each click gets the latest prior-or-equal view's value per user.
+    window: ONE shuffle of |L|+|R| rows, no range-join blowup. Each
+    click gets the latest prior-or-equal view's value per user; equal-ts
+    views tie-break to the max event_id.
     Engine-specific only in the IGNORE NULLS placement; DuckDB's native
     ASOF JOIN independently cross-checks this in test_asof."""
     lv = ("LAST_VALUE(rv IGNORE NULLS)" if base == DUCKDB_BASE

@@ -42,7 +42,8 @@ def get_spark(master: str | None = None, app_name: str = "loc2vec_spark",
     if shuffle_partitions is None:
         cores = os.cpu_count() or 8
         if master.startswith("local["):
-            inner = master[len("local["):-1]
+            # local[N] or local[N,maxFailures]: cores come before the comma
+            inner = master[len("local["):-1].split(",")[0]
             if inner != "*":
                 cores = int(inner)
         shuffle_partitions = max(8, cores)

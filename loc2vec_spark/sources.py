@@ -148,8 +148,7 @@ def read_documents(spark: SparkSession, path: str, *, fmt: str = "jsonl",
     the tail of every real crawl; one bad row of 10^12 must neither kill
     the job (ANSI Spark throws on silent coercions) nor silently vanish.
     PERMISSIVE mode routes unparseable lines into a corrupt-record
-    column; the quarantine frame carries the raw line for debugging —
-    same contract as ``streaming.quarantine_split`` for binary rows.
+    column; the quarantine frame carries the raw line for debugging.
 
     Scale notes: schema is explicit (inference = an extra full scan at
     10^12 rows and a schema race across shards); line-delimited JSON and

@@ -1,12 +1,14 @@
-"""As-of join: DataFrame operator vs SQL face vs DuckDB native ASOF."""
+"""As-of join: the registered ``asof_events`` SQL face, on hand-built
+rows and against DuckDB's native ASOF JOIN."""
+
+import datetime as dt
 
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from loc2vec_spark.operators.asof import asof_join
+from loc2vec_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.01"
 
@@ -14,30 +16,6 @@ SF = "/root/testdata/sf0.01"
 @pytest.fixture(scope="module")
 def events(spark):
     return spark.read.parquet(f"{SF}/events.parquet").cache()
-
-
-def test_operator_matches_sql_face(spark, events):
-    """The DataFrame operator computes exactly the registered
-    asof_events SQL (same union-tag formulation)."""
-    from loc2vec_spark.functions import SPARK_BASE
-    from loc2vec_spark.queries import QUERIES, _asof_sql
-
-    events.createOrReplaceTempView("events")
-    clicks = events.filter("event_type = 'click'") \
-                   .select("event_id", "user_id", "ts", "value")
-    views = events.filter("event_type = 'view'") \
-                  .select("event_id", "user_id", "ts", "value")
-    got = asof_join(clicks, views, key_col="user_id", ts_col="ts",
-                    value_col="value", tiebreak_col="event_id",
-                    out_col="asof_view_value") \
-        .select("event_id", F.round("asof_view_value", 6)
-                .alias("asof_view_value"))
-    exp = spark.sql(QUERIES["asof_events"].spark_sql) \
-               .select("event_id", "asof_view_value")
-    assert got.count() == exp.count() == clicks.count()
-    assert got.exceptAll(exp).count() == 0
-    assert exp.exceptAll(got).count() == 0
-    assert _asof_sql(SPARK_BASE) == QUERIES["asof_events"].spark_sql
 
 
 def test_matches_duckdb_native_asof(spark, events):
@@ -67,7 +45,6 @@ def test_matches_duckdb_native_asof(spark, events):
         GROUP BY 1, 2 HAVING COUNT(*) > 1""").fetchall()}
 
     events.createOrReplaceTempView("events")
-    from loc2vec_spark.queries import QUERIES
     mine = {r["event_id"]: r["asof_view_value"]
             for r in spark.sql(QUERIES["asof_events"].spark_sql).collect()}
     n_checked = 0
@@ -82,141 +59,58 @@ def test_matches_duckdb_native_asof(spark, events):
 
 
 def test_semantics_handbuilt(spark):
-    """Inclusive boundary, tie-break by max id, NULL before any right."""
-    import datetime as dt
-
+    """Inclusive boundary, tie-break by max id, NULL before any view."""
     t = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)  # noqa: E731
-    left = spark.createDataFrame(
-        [(100, 1, t(5)), (101, 1, t(10)), (102, 2, t(3))],
-        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP")
-    right = spark.createDataFrame(
-        [(1, 1, t(5), 1.0), (2, 1, t(5), 2.0), (3, 1, t(7), 7.0),
-         (4, 9, t(1), 9.0)],
-        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, value DOUBLE")
-    out = {r["event_id"]: r["v"] for r in asof_join(
-        left, right.withColumnRenamed("event_id", "rid"),
-        key_col="user_id", ts_col="ts", value_col="value",
-        tiebreak_col="rid", out_col="v").collect()}
+    spark.createDataFrame(
+        [(1, 1, t(5), "view", 1.0), (2, 1, t(5), "view", 2.0),
+         (3, 1, t(7), "view", 7.0), (4, 9, t(1), "view", 9.0),
+         (100, 1, t(5), "click", 0.5), (101, 1, t(10), "click", 0.5),
+         (102, 2, t(3), "click", 0.5)],
+        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, event_type STRING, "
+        "value DOUBLE").createOrReplaceTempView("events")
+    out = {r["event_id"]: r["asof_view_value"]
+           for r in spark.sql(QUERIES["asof_events"].spark_sql).collect()}
+    spark.catalog.dropTempView("events")
+    assert set(out) == {100, 101, 102}  # one row per click
     assert out[100] == 2.0   # inclusive ts=5; max-id tie wins over 1.0
     assert out[101] == 7.0   # latest prior
     assert out[102] is None  # user 2 has no views at all
 
 
-def test_bucketed_scale_path_identical(spark, events):
-    """The hot-key scale path (bounded per-task history via time
-    buckets + carry-in summaries) computes exactly the plain result —
-    at several widths, including ones smaller than typical gaps (many
-    empty-carry buckets) and huge ones (single bucket = plain path)."""
-    clicks = events.filter("event_type = 'click'") \
-                   .select("event_id", "user_id", "ts", "value")
-    views = events.filter("event_type = 'view'") \
-                  .select(F.col("event_id").alias("rid"), "user_id",
-                          "ts", "value")
-    kw = dict(key_col="user_id", ts_col="ts", value_col="value",
-              tiebreak_col="rid", out_col="v")
-    plain = asof_join(clicks, views, **kw).cache()
-    assert plain.filter("v IS NOT NULL").count() > 1000
-    for width in (3600, 86_400, 10**9):
-        bucketed = asof_join(clicks, views, bucket_width=width, **kw)
-        assert plain.exceptAll(bucketed).count() == 0
-        assert bucketed.exceptAll(plain).count() == 0
-    plain.unpersist()
-
-
-def test_bucketed_semantics_handbuilt(spark):
-    """Carry-in crosses empty buckets; within-bucket right rows win."""
-    import datetime as dt
-
-    t = lambda s: dt.datetime(2024, 1, 1, 0, 0, 0) \
-        + dt.timedelta(seconds=s)  # noqa: E731
-    left = spark.createDataFrame(
-        [(100, 1, t(5)), (101, 1, t(3600 * 10)), (102, 1, t(3600 * 10 + 1))],
-        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP")
-    right = spark.createDataFrame(
-        [(1, 1, t(2), 2.0), (2, 1, t(3600 * 10), 10.0)],
-        "rid BIGINT, user_id BIGINT, ts TIMESTAMP, value DOUBLE")
-    out = {r["event_id"]: r["v"] for r in asof_join(
-        left, right, key_col="user_id", ts_col="ts", value_col="value",
-        tiebreak_col="rid", out_col="v", bucket_width=3600).collect()}
-    assert out[100] == 2.0    # same-bucket right row
-    assert out[101] == 10.0   # inclusive boundary inside bucket 10
-    assert out[102] == 10.0   # and it persists within the bucket
-
-
-def test_bucketed_null_rows_and_null_values(spark):
-    """Review r2 regressions: NULL-ts left rows survive the bucketed
-    path, and a bucket whose LATEST right value is NULL still carries
-    its latest non-null value forward."""
-    left = spark.createDataFrame(
-        [(100, 1, 5000), (101, 1, None), (102, 1, 9000)],
-        "event_id BIGINT, user_id BIGINT, ts BIGINT")
-    right = spark.createDataFrame(
-        [(1, 1, 1000, 7.0), (2, 1, 2000, None)],
-        "rid BIGINT, user_id BIGINT, ts BIGINT, value DOUBLE")
-    for width in (100, 10_000):
-        out = {r["event_id"]: r["v"] for r in asof_join(
-            left, right, key_col="user_id", ts_col="ts",
-            value_col="value", tiebreak_col="rid", out_col="v",
-            bucket_width=width).collect()}
-        assert len(out) == 3          # NULL-ts row not dropped
-        assert out[101] is None
-        # latest right row (ts=2000) has NULL value; the non-null 7.0
-        # must still reach later buckets/rows
-        assert out[100] == 7.0 and out[102] == 7.0
-
-
-def test_bucketed_null_key_carry(spark):
-    """Review r2: NULL join keys group together in the plain path's
-    window, so the bucketed carry join must be null-safe to deliver
-    their cross-bucket carry-in."""
-    left = spark.createDataFrame(
-        [(100, None, 5000)],
-        "event_id BIGINT, user_id BIGINT, ts BIGINT")
-    right = spark.createDataFrame(
-        [(1, None, 1000, 7.0)],
-        "rid BIGINT, user_id BIGINT, ts BIGINT, value DOUBLE")
-    kw = dict(key_col="user_id", ts_col="ts", value_col="value",
-              tiebreak_col="rid", out_col="v")
-    plain = asof_join(left, right, **kw).collect()
-    buck = asof_join(left, right, bucket_width=100, **kw).collect()
-    assert plain[0]["v"] == 7.0
-    assert buck[0]["v"] == 7.0  # carry crosses buckets for NULL key too
-
-
 def test_randomized_against_python_reference(spark):
-    """50 random instances in ONE Spark pass (case id folded into the
-    join key) vs a brute-force python as-of: plain and bucketed paths
-    both match on duplicates, ties, empty sides, and boundary hits."""
+    """50 random instances in ONE Spark pass (case id as the user_id)
+    vs a brute-force python as-of: the asof_events query matches on
+    duplicates, ties, empty sides, and boundary hits."""
     rng = np.random.default_rng(123)
-    lrows, rrows, expected = [], [], {}
-    eid = rid = 0
+    t0 = dt.datetime(2024, 1, 1)
+    rows, expected = [], {}
+    vid, cid = 0, 10_000
     for case in range(50):
-        n_l, n_r = rng.integers(0, 12, 2)
-        rs = sorted(
+        n_c, n_v = rng.integers(0, 12, 2)
+        vs = sorted(
             [(int(rng.integers(0, 40)), float(rng.integers(0, 9)))
-             for _ in range(n_r)])
-        for ts, v in rs:
-            rid += 1
-            rrows.append((rid, case, ts, v))
-        for _ in range(n_l):
+             for _ in range(n_v)])
+        for ts, v in vs:
+            vid += 1
+            rows.append((vid, case, t0 + dt.timedelta(seconds=ts),
+                         "view", v))
+        for _ in range(n_c):
             ts = int(rng.integers(0, 45))
-            eid += 1
-            lrows.append((eid, case, ts))
-            # python reference: latest right with r.ts <= ts; ties by
-            # max rid (insertion order is ts-sorted, so scan works)
+            cid += 1
+            rows.append((cid, case, t0 + dt.timedelta(seconds=ts),
+                         "click", 0.0))
+            # python reference: latest view with v.ts <= ts; ties by
+            # max view id (ids follow the ts-sorted order, so scan works)
             best = None
-            for i, (rts, rv) in enumerate(rs):
-                if rts <= ts:
-                    best = (rts, i, rv)
-            expected[eid] = best[2] if best else None
-    left = spark.createDataFrame(lrows,
-                                 "event_id BIGINT, k BIGINT, ts BIGINT")
-    right = spark.createDataFrame(
-        rrows, "rid BIGINT, k BIGINT, ts BIGINT, value DOUBLE")
-    kw = dict(key_col="k", ts_col="ts", value_col="value",
-              tiebreak_col="rid", out_col="v")
-    for bw in (None, 7):
-        got = {r["event_id"]: r["v"]
-               for r in asof_join(left, right, bucket_width=bw,
-                                  **kw).collect()}
-        assert got == expected, f"bucket_width={bw}"
+            for vts, vv in vs:
+                if vts <= ts:
+                    best = vv
+            expected[cid] = best
+    spark.createDataFrame(
+        rows, "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, "
+              "event_type STRING, value DOUBLE") \
+        .createOrReplaceTempView("events")
+    got = {r["event_id"]: r["asof_view_value"]
+           for r in spark.sql(QUERIES["asof_events"].spark_sql).collect()}
+    spark.catalog.dropTempView("events")
+    assert got == expected

@@ -153,17 +153,20 @@ def test_sql_wrap_matches_numpy_negative_lons():
 
 
 def test_quadkey_numpy_sql_parity_and_prefix_law(spark):
-    """The numpy face equals the SQL face on real data, the res-5 key is
-    a strict prefix of the res-7 key (hierarchy-by-prefix law), and
-    lexicographic quadkey order equals Morton (z-order) cell order."""
+    """The SQL face equals per-digit numpy bit extraction on real data,
+    the res-5 key is a strict prefix of the res-7 key (hierarchy-by-prefix
+    law), and lexicographic quadkey order equals Morton (z-order) cell
+    order."""
     from loc2vec_spark import cells, queries as q
     out = q.run_spark(spark, "/root/testdata/sf0.01",
                       "quadkey_assign").collect()
     assert all(len(r.qk7) == 7 and len(r.qk5) == 5 for r in out)
     assert all(r.qk7.startswith(r.qk5) for r in out)
     i, j = cells.cell_ij(np.array([r.cell for r in out]))
-    np_qk = cells.ij_to_quadkey(i, j, 7)
-    assert list(np_qk) == [r.qk7 for r in out]
+    # digit = 2*j_bit + i_bit, msb-first
+    digits = [((j >> s) & 1) * 2 + ((i >> s) & 1) for s in range(6, -1, -1)]
+    np_qk = ["".join(str(d[k]) for d in digits) for k in range(len(out))]
+    assert np_qk == [r.qk7 for r in out]
     # prefix order = interleaved-bits order: sorting by quadkey equals
     # sorting by the Morton number of (i, j)
     def morton(ii, jj):

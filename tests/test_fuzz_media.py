@@ -12,7 +12,6 @@ from loc2vec_spark.operators import bmp as B
 from loc2vec_spark.operators import gif as G
 from loc2vec_spark.operators import ico as I
 from loc2vec_spark.operators import jpeg as J
-from loc2vec_spark.operators import mp3 as A
 from loc2vec_spark.operators import mp4 as M
 from loc2vec_spark.operators import tiff as TF
 from loc2vec_spark.operators import video as V
@@ -78,16 +77,6 @@ def test_mp4_fuzz_contract():
     data = M.encode_mjpeg_mp4(np.stack([_gray(), _gray(seed=9)]), fps=8)
     _assert_contract(M.parse_mp4, data, 31)
     _assert_contract(M.decode_mp4, data, 32)
-
-
-def test_mp3_fuzz_contract():
-    _assert_contract(A.parse_mp3, A.synth_mp3_bytes(6, xing=True,
-                                                    id3v2=True), 41)
-
-
-def test_adts_fuzz_contract():
-    from loc2vec_spark.operators import aac
-    _assert_contract(aac.parse_adts, aac.synth_adts_bytes(6), 61)
 
 
 def test_wav_fuzz_contract():

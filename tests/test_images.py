@@ -50,8 +50,6 @@ _ALL_CORRUPT_CASES = [
     ("images.detect_borders", "image_id", True),
     ("audio.audio_stats", "audio_id", True),
     ("video.video_stats", "video_id", True),
-    ("mp3.mp3_probe", "audio_id", True),
-    ("aac.aac_probe", "audio_id", True),
     ("webp.webp_probe", "image_id", True),
     ("mp4.mp4_probe", "video_id", True),
     ("images.image_features", "image_id", False),

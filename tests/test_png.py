@@ -54,6 +54,7 @@ def _encode_filtered(arr: np.ndarray, filter_of_row) -> bytes:
             + _chunk(b"IEND", b""))
 
 
+@np.errstate(over="ignore")  # PNG filter sums wrap mod 256 by spec
 def _decode_reference_slow(data: bytes) -> np.ndarray:
     """The r1 per-byte unfilter loop, kept as the micro-bench baseline
     and as an independent second implementation for cross-checking."""

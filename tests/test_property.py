@@ -2,17 +2,16 @@
 
 These cover the engine's self-written codecs and cell math with
 generated inputs rather than fixed fixtures — the invariants that must
-hold for ANY input: lossless round-trips, containment/idempotence of
-the cell hierarchy, and the batch-probe bounds. No SparkSession here;
-every property is a driver-side kernel, so hypothesis can run hundreds
-of cases in seconds.
+hold for ANY input: lossless round-trips and containment/idempotence
+of the cell hierarchy. No SparkSession here; every property is a
+driver-side kernel, so hypothesis can run hundreds of cases in seconds.
 """
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from loc2vec_spark import cells, sizing
+from loc2vec_spark import cells
 from loc2vec_spark.operators.audio import decode_wav, encode_wav
 from loc2vec_spark.operators.video import decode_y4m, encode_y4m
 from loc2vec_spark.png_codec import decode_png, encode_png
@@ -89,32 +88,6 @@ def test_kring_contains_self_and_is_unique(lat, lon, res, k):
     assert c in ring
     assert len(ring) == len(set(ring))
     assert len(ring) <= (2 * k + 1) ** 2
-
-
-@settings(max_examples=60, deadline=None)
-@given(st.integers(1, 10**7), st.integers(8, 10**4),
-       st.integers(4, 10**6))
-def test_batch_probe_bounds(n_rows, width, budget):
-    """Pure-arithmetic core of the probe: result is a power of two (or
-    the max clamp), within budget or at the row-count halving bound."""
-    class _FakeDF:
-        def count(self):
-            return n_rows
-
-        def limit(self, k):
-            return self
-
-        def toPandas(self):
-            import pandas as pd
-            return pd.DataFrame({"x": np.zeros(min(n_rows, 10),
-                                               dtype=np.int64)})
-
-    # monkeypatch-free: arrow_batch_records only uses count/limit/toPandas
-    df = _FakeDF()
-    n = sizing.arrow_batch_records(df, mem_budget_bytes=budget,
-                                   max_records=4096)
-    assert 1 <= n <= 4096
-    assert n == 4096 or (n & (n - 1)) == 0
 
 
 # --- round-2 kernels: morton interleave + average-hash -------------------

@@ -1,5 +1,8 @@
 """Session defaults sized to the host."""
 
+import pytest
+
+from loc2vec_spark import session
 from loc2vec_spark.session import MAX_DRIVER_MEM_MB, default_driver_memory
 
 
@@ -25,3 +28,46 @@ def test_driver_memory_without_meminfo(tmp_path):
     bad = tmp_path / "bad"
     bad.write_text("MemTotal: lots\n")
     assert default_driver_memory(str(bad)) == "16384m"
+
+
+class _FakeBuilder:
+    """Records the conf ``get_spark`` sets, so its master parsing is
+    tested without starting a second JVM session."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def master(self, m):
+        self.conf["master"] = m
+        return self
+
+    def appName(self, name):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        class _Ctx:
+            def setLogLevel(self, level):
+                pass
+
+        class _Session:
+            sparkContext = _Ctx()
+        return _Session()
+
+
+@pytest.mark.parametrize("master, partitions", [
+    ("local[4]", "8"), ("local[12]", "12"), ("local[4,3]", "8"),
+    ("local[12,3]", "12")])
+def test_shuffle_partitions_from_local_master(monkeypatch, master,
+                                              partitions):
+    """``local[N,F]`` (local mode with F task attempts) takes its core
+    count before the comma instead of failing on ``int("N,F")``."""
+    fake = _FakeBuilder()
+    monkeypatch.setattr(session, "SparkSession",
+                        type("SparkSession", (), {"builder": fake}))
+    session.get_spark(master=master)
+    assert fake.conf["master"] == master
+    assert fake.conf["spark.sql.shuffle.partitions"] == partitions

@@ -1,348 +1,4 @@
-"""Structured Streaming surface: incremental resume, quarantine, windows."""
-
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from loc2vec_spark import streaming
-from loc2vec_spark.fixtures import write_fixtures
-
-
-@pytest.fixture()
-def img_src(tmp_path):
-    """A source dir seeded with one fixture batch (shard files)."""
-    d = tmp_path / "src"
-    write_fixtures(str(d), n_images=200, with_channels=False, n_shards=2)
-    return str(d / "images.parquet")
-
-
-def _add_batch(src_dir, tmp_path, n, start_tag):
-    """Drop a second, disjoint fixture batch into the same source dir."""
-    d = tmp_path / start_tag
-    write_fixtures(str(d), n_images=n, with_channels=False, n_shards=1)
-    import shutil
-    for fn in os.listdir(str(d / "images.parquet")):
-        if fn.endswith(".parquet"):
-            shutil.copy(os.path.join(str(d / "images.parquet"), fn),
-                        os.path.join(src_dir, f"{start_tag}_{fn}"))
-
-
-def test_incremental_tiling_resumes_from_checkpoint(spark, img_src,
-                                                    tmp_path):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    s1 = streaming.incremental_tiling(spark, img_src, out, ckpt)
-    # the fixture plants deliberately-corrupt rows; every input row must
-    # land in exactly one of tiles / dead-letter
-    assert s1["rows"] + s1["quarantined"] == 200 and s1["rows"] > 150
-    tiles1 = spark.read.parquet(os.path.join(out, "tiles"))
-    assert tiles1.count() == s1["rows"]
-    assert "cell_r7" in tiles1.columns
-
-    # second invocation with NO new files: checkpoint says all done
-    s2 = streaming.incremental_tiling(spark, img_src, out, ckpt)
-    assert s2["rows"] == 0 and s2["quarantined"] == 0
-
-    # drop new files in; only they are processed
-    _add_batch(img_src, tmp_path, 50, "b2")
-    s3 = streaming.incremental_tiling(spark, img_src, out, ckpt)
-    assert s3["rows"] + s3["quarantined"] == 50
-    total = spark.read.parquet(os.path.join(out, "tiles")).count()
-    assert total == s1["rows"] + s3["rows"]
-
-
-def test_quarantine_split_routes_bad_rows(spark):
-    rows = [
-        ("ok1", b"x", 8, 8, "png", "tile at lat=10.5 lon=20.25", 7),
-        # every decode_image-sniffed format is a good row — bmp/gif
-        # moved from bad_format to good when their codecs landed
-        ("ok2", b"x", 8, 8, "gif", "tile at lat=10.5 lon=20.25", 10),
-        ("bad_fmt", b"x", 8, 8, "webp",
-         "tile at lat=10.5 lon=20.25", 8),
-        ("bad_cap", b"x", 8, 8, "png", "no coordinates here", 9),
-    ]
-    df = spark.createDataFrame(rows, streaming.IMAGES_SCHEMA)
-    good, bad = streaming.quarantine_split(df)
-    assert [r["image_id"] for r in good.collect()] == ["ok1", "ok2"]
-    got = {r["image_id"]: r["quarantine_reason"] for r in bad.collect()}
-    assert got == {"bad_fmt": "bad_format", "bad_cap": "bad_metadata"}
-
-
-def test_windowed_counts_stream_equals_batch(spark, tmp_path):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    batch = streaming.windowed_event_counts(events)
-    expected = {(r["win_start"], r["event_type"]): (r["n"], r["sum_value"])
-                for r in batch.collect()}
-
-    src = str(tmp_path / "ev")
-    events.write.parquet(src)
-    stream = (spark.readStream.schema(streaming.EVENTS_SCHEMA)
-                   .parquet(src))
-    agg = streaming.windowed_event_counts(stream)
-    out = []
-
-    def sink(bdf, bid):
-        out.extend(bdf.collect())
-
-    q = (agg.writeStream.outputMode("complete").foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "wc"))
-            .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {(r["win_start"], r["event_type"]): (r["n"], r["sum_value"])
-           for r in out}
-    assert got == expected
-
-
-def test_windowed_counts_match_events_tumbling_oracle_query(spark):
-    """The streaming face must agree with the oracle-checked batch query
-    exactly — incl. the 4th decimal of sum_value, which is why both sum
-    DECIMAL(18,4)-quantized values rather than raw doubles (ADVICE r1:
-    double-sum fold order can flip ROUND(x, 4))."""
-    from loc2vec_spark import queries as qreg
-    import tests.conftest as c
-    events = spark.read.parquet(f"{c.TESTDATA}/events.parquet")
-    face = {(int(r["win_start"].timestamp()), r["event_type"]):
-            (r["n"], r["sum_value"])
-            for r in streaming.windowed_event_counts(events).collect()}
-    oracle = {(r["win_start_epoch"], r["event_type"]):
-              (r["n"], r["sum_value"])
-              for r in qreg.run_spark(spark, c.TESTDATA,
-                                      "events_tumbling").collect()}
-    assert face == oracle
-
-
-def test_watermark_present_on_stream(spark, tmp_path):
-    src = str(tmp_path / "ev2")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-         .write.parquet(src)
-    stream = (spark.readStream.schema(streaming.EVENTS_SCHEMA)
-                   .parquet(src))
-    agg = streaming.windowed_event_counts(stream, watermark="15 minutes")
-    assert agg.isStreaming
-    assert "watermark" in agg._jdf.queryExecution().analyzed().toString() \
-        .lower()
-
-
-def test_sessionize_stream_equals_batch_and_oracle(spark, tmp_path):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    batch = streaming.sessionize_stream(events)
-    expected = {(r["user_id"], r["session_start_us"]):
-                (r["n_events"], r["session_end_us"])
-                for r in batch.collect()}
-    assert expected
-
-    # exact boundary agreement with the lag+cumsum oracle formulation:
-    # session_window.start = first event ts; .end = last event + gap
-    from loc2vec_spark.queries import run_spark
-    gap_us = 30 * 60 * 1_000_000
-    oracle = {(r["user_id"], r["session_start_us"]):
-              (r["n_events"], r["session_end_us"] + gap_us)
-              for r in run_spark(spark, "/root/testdata/sf0.001",
-                                 "events_sessionize").collect()}
-    assert expected == oracle
-
-    src = str(tmp_path / "sess_ev")
-    events.write.parquet(src)
-    stream = (spark.readStream.schema(streaming.EVENTS_SCHEMA)
-                   .parquet(src))
-    agg = streaming.sessionize_stream(stream)
-    out = []
-
-    def sink(bdf, bid):
-        out.extend(bdf.collect())
-
-    q = (agg.writeStream.outputMode("complete").foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "sess_ck"))
-            .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {(r["user_id"], r["session_start_us"]):
-           (r["n_events"], r["session_end_us"]) for r in out}
-    assert got == expected
-
-
-def test_quarantine_split_null_metadata_not_dropped(spark):
-    # NULL fmt/w/h (what sources.read_image_tree emits for corrupt
-    # files) must land in dead-letter, not vanish (NULL predicate fails
-    # both filter(ok) and filter(~ok) without the coalesce guard)
-    rows = [("n1", b"x", None, None, None, "tile at lat=1.5 lon=2.25", 1),
-            ("n2", None, 8, 8, "png", None, 2)]
-    df = spark.createDataFrame(rows, streaming.IMAGES_SCHEMA)
-    good, bad = streaming.quarantine_split(df)
-    assert good.count() == 0
-    got = {r["image_id"]: r["quarantine_reason"] for r in bad.collect()}
-    assert got == {"n1": "bad_format", "n2": "bad_metadata"}
-
-
-def test_running_user_stats_accumulates_across_microbatches(spark,
-                                                            tmp_path):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    expected = {r["user_id"]: (r["n"], round(r["total"], 6))
-                for r in events.groupBy("user_id")
-                .agg(F.count("*").alias("n"),
-                     F.sum("value").alias("total")).collect()}
-
-    # two source files -> maxFilesPerTrigger=1 forces TWO microbatches
-    # in one run; the final emitted row per user must hold the
-    # cumulative state, not the last batch's local count
-    src = str(tmp_path / "st_ev")
-    events.repartition(2).write.parquet(src)
-    stream = (spark.readStream.schema(streaming.EVENTS_SCHEMA)
-                   .option("maxFilesPerTrigger", "1").parquet(src))
-    agg = streaming.running_user_stats(stream)
-    latest = {}
-
-    def sink(bdf, bid):
-        for r in bdf.collect():
-            latest[r["user_id"]] = (r["n_events"],
-                                    round(r["total_value"], 6))
-
-    q = (agg.writeStream.outputMode("update").foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "st_ck"))
-            .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert {u: v[0] for u, v in latest.items()} == \
-        {u: v[0] for u, v in expected.items()}
-    for u in expected:
-        assert latest[u][1] == pytest.approx(expected[u][1], abs=1e-4)
-
-
-def test_incremental_media_stats_resume_and_quarantine(spark, tmp_path):
-    """Multimodal ingestion composes with the streaming resume machinery:
-    first drain decodes everything (corrupt clips -> dead-letter), a
-    re-run with no new files is a no-op, new files alone re-trigger."""
-    import pandas as pd
-
-    from loc2vec_spark.operators.audio import synth_audio_pdf
-    from loc2vec_spark.streaming import incremental_media_stats
-
-    src = tmp_path / "asrc"
-    src.mkdir()
-    pdf = synth_audio_pdf(34)  # 2 corrupt (i % 17 == 3)
-    pdf.iloc[:20].to_parquet(src / "part0.parquet")
-    pdf.iloc[20:].to_parquet(src / "part1.parquet")
-
-    out, ckpt = str(tmp_path / "aout"), str(tmp_path / "ackpt")
-    s1 = incremental_media_stats(spark, str(src), out, ckpt, kind="audio")
-    assert s1["rows"] + s1["quarantined"] == 34
-    assert s1["quarantined"] == 2
-    # all good rows decoded with real stats
-    got = spark.read.parquet(f"{out}/stats/*")
-    assert got.filter("rms IS NULL").count() == 0
-
-    # drained checkpoint: nothing new -> no batches, no rows
-    s2 = incremental_media_stats(spark, str(src), out, ckpt, kind="audio")
-    assert s2["rows"] == 0 and s2["quarantined"] == 0
-
-    # a late-arriving shard is picked up alone; include one NULL-bytes
-    # row — it must be QUARANTINED (dead-letter + count), not vanish
-    late = synth_audio_pdf(5).assign(
-        audio_id=lambda d: "late_" + d["audio_id"])
-    late.loc[len(late)] = {"audio_id": "late_null", "bytes": None,
-                           "rate": 8000, "n_samples": 0, "fmt": "wav"}
-    late.to_parquet(src / "part2.parquet")
-    s3 = incremental_media_stats(spark, str(src), out, ckpt, kind="audio")
-    assert s3["rows"] + s3["quarantined"] == 6
-    dl = spark.read.parquet(f"{out}/_dead_letter/*")
-    assert dl.filter("quarantine_reason = 'null_bytes'").count() == 1
-
-
-def test_incremental_media_stats_video(spark, tmp_path):
-    from loc2vec_spark.operators.video import synth_video_pdf
-    from loc2vec_spark.streaming import incremental_media_stats
-
-    src = tmp_path / "vsrc"
-    src.mkdir()
-    synth_video_pdf(13).to_parquet(src / "part0.parquet")  # 1 corrupt
-    s = incremental_media_stats(
-        spark, str(src), str(tmp_path / "vout"),
-        str(tmp_path / "vckpt"), kind="video")
-    assert s["rows"] == 12 and s["quarantined"] == 1
-    got = spark.read.parquet(str(tmp_path / "vout") + "/stats/*")
-    assert got.filter("motion IS NULL").count() == 0
-
-
-def test_incremental_media_stats_mp4(spark, tmp_path):
-    """MP4 containers flow the SAME streaming ingestion path as Y4M via
-    decode_video's magic sniff: MJPEG clips decode to real stats, an
-    avc1 clip (valid container, codec we can't decode) quarantines."""
-    import numpy as np
-    import pandas as pd
-
-    from loc2vec_spark.operators.mp4 import encode_mjpeg_mp4
-    from loc2vec_spark.streaming import incremental_media_stats
-
-    fr = np.clip(
-        (np.mgrid[0:16, 0:16][1] * 16).astype(np.int16)[None].repeat(3, 0)
-        + np.random.default_rng(5).integers(-2, 3, (3, 16, 16)),
-        0, 255).astype(np.uint8)
-    rows = [{"video_id": f"m{i}", "bytes": encode_mjpeg_mp4(
-                fr, fps=10, codec=("avc1" if i == 1 else "jpeg")),
-             "w": 16, "h": 16, "n_frames": 3, "fps": 10.0, "fmt": "mp4"}
-            for i in range(4)]
-    src = tmp_path / "msrc"
-    src.mkdir()
-    pd.DataFrame(rows).to_parquet(src / "part0.parquet")
-    s = incremental_media_stats(
-        spark, str(src), str(tmp_path / "mout"),
-        str(tmp_path / "mckpt"), kind="video")
-    assert s["rows"] == 3 and s["quarantined"] == 1
-    got = spark.read.parquet(str(tmp_path / "mout") + "/stats/*")
-    assert got.filter("motion IS NULL").count() == 0
-    assert got.filter("fps = 10.0").count() == 3
-
-
-def test_dedup_stream_drops_redeliveries_within_watermark(spark, tmp_path):
-    """Streaming exact dedup with bounded state: duplicate event_ids
-    re-delivered across microbatches surface exactly once."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from loc2vec_spark.streaming import EVENTS_SCHEMA, dedup_stream
-
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-    mk = lambda eid, s: {  # noqa: E731
-        "event_id": eid, "ts": t0 + dt.timedelta(seconds=s),
-        "user_id": eid % 7, "event_type": "view",
-        "value": float(eid), "props": "{}"}
-    src = tmp_path / "dsrc"
-    src.mkdir()
-    # batch 0: ids 0-49; batch 1 (same file drain): ids 25-74 — 25
-    # re-deliveries inside the watermark
-    def _write(rows, path):
-        pdf = pd.DataFrame(rows)
-        # microsecond timestamps: pandas' default ns parquet type
-        # mismatches the stream schema's TIMESTAMP
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pdf.to_parquet(path)
-
-    _write([mk(i, i) for i in range(50)], src / "part0.parquet")
-    _write([mk(i, i) for i in range(25, 75)], src / "part1.parquet")
-
-    stream = (spark.readStream.schema(EVENTS_SCHEMA)
-              .option("maxFilesPerTrigger", "1").parquet(str(src)))
-    out_rows = []
-
-    def sink(batch_df, batch_id):
-        out_rows.extend(batch_df.collect())
-
-    q = (dedup_stream(stream, key_cols=["event_id"], ts_col="ts")
-         .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", str(tmp_path / "dckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    ids = [r["event_id"] for r in out_rows]
-    assert sorted(ids) == list(range(75))  # every id exactly once
-    assert len(ids) == len(set(ids))
-
-    # batch face: plain first-per-key dedup
-    batch = spark.createDataFrame(
-        pd.DataFrame([mk(i % 10, i) for i in range(40)]))
-    assert dedup_stream(batch, key_cols=["event_id"],
-                        ts_col="ts").count() == 10
+"""Windowed event surfaces: the registered sliding-window query."""
 
 
 def test_events_sliding_double_counts_each_event(spark):
@@ -358,191 +14,3 @@ def test_events_sliding_double_counts_each_event(spark):
     starts = [r.win_start_epoch for r in out.select("win_start_epoch")
               .distinct().collect()]
     assert all(s % 300 == 0 for s in starts)
-
-
-# ---------------------------------------------------------------------------
-# join_streams — watermarked stream-stream interval join
-# ---------------------------------------------------------------------------
-
-def _jt(day, minute):
-    from datetime import datetime, timedelta
-    return datetime(2026, 3, 1 + day, 9, 0) + timedelta(minutes=minute)
-
-
-def _join_fixture():
-    """(views, clicks, click_late_ok, click_too_late) row lists.
-
-    Views at minute 0 per (day, user); clicks at +3min (join: within
-    the 10-minute delay) and +12min (no join). Day 1 sits 24h after
-    day 0 — far past the 30-minute watermark — so the straggler run
-    must evict day-0 state. The late-but-ok click (id 290) carries a
-    day-1 timestamp newer than the restored watermark; the too-late
-    click (id 291) carries a day-0 timestamp and must be DROPPED."""
-    views, clicks = [], []
-    for day in (0, 1):
-        for u in range(3):
-            views.append((100 + day * 10 + u, _jt(day, 0), u,
-                          "view", float(u), None))
-            clicks.append((200 + day * 10 + u, _jt(day, 3), u,
-                           "click", 10.0 + u, None))
-            clicks.append((220 + day * 10 + u, _jt(day, 12), u,
-                           "click", 20.0 + u, None))
-    late_ok = (290, _jt(1, 5), 0, "click", 90.0, None)
-    too_late = (291, _jt(0, 4), 1, "click", 91.0, None)
-    return views, clicks, late_ok, too_late
-
-
-def test_join_streams_batch_equals_stream_resumes_and_evicts(
-        spark, tmp_path, capsys):
-    import pandas as pd
-    views, clicks, late_ok, too_late = _join_fixture()
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-
-    def mkdf(rows):
-        return spark.createDataFrame(pd.DataFrame(rows, columns=cols),
-                                     streaming.EVENTS_SCHEMA)
-
-    # batch face: identical expression on static frames; truth EXCLUDES
-    # the too-late click (the watermark-drop contract)
-    batch = streaming.join_streams(mkdf(clicks + [late_ok]), mkdf(views))
-    expected = {(r["event_id"], r["r_event_id"]) for r in batch.collect()}
-    assert expected == {(200 + d * 10 + u, 100 + d * 10 + u)
-                       for d in (0, 1) for u in range(3)} | {(290, 110)}
-
-    vsrc, csrc, ck = (str(tmp_path / d) for d in ("v", "c", "ck"))
-    mkdf(views).coalesce(1).write.parquet(vsrc)
-    mkdf(clicks).coalesce(1).write.parquet(csrc)
-    out = []
-
-    def run():
-        vs = spark.readStream.schema(streaming.EVENTS_SCHEMA).parquet(vsrc)
-        cs = spark.readStream.schema(streaming.EVENTS_SCHEMA).parquet(csrc)
-        q = (streaming.join_streams(cs, vs)
-             .writeStream.outputMode("append")
-             .foreachBatch(lambda bdf, bid: out.extend(bdf.collect()))
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return q
-
-    q1 = run()  # run 1: both days in one batch, watermark -> day1-30min
-    n_run1 = len(out)
-    assert {(r["event_id"], r["r_event_id"]) for r in out} \
-        == expected - {(290, 110)}
-
-    # run 2 resumes from the checkpoint (restored watermark) and sees
-    # only the straggler file
-    mkdf([late_ok, too_late]).coalesce(1).write.mode("append").parquet(csrc)
-    q2 = run()
-    got = {(r["event_id"], r["r_event_id"]) for r in out}
-    assert got == expected          # 290 joined, 291 dropped
-    assert len(out) == n_run1 + 1
-
-    # bounded state: run 1's watermark-advance follow-up batch evicts
-    # the day-0 rows (availableNow runs it before terminating), and the
-    # straggler batch's state never holds both days' rows
-    p1 = [p for p in q1.recentProgress if p["stateOperators"]]
-    assert any(p["stateOperators"][0]["numRowsRemoved"] > 0 for p in p1)
-    p2 = [p for p in q2.recentProgress if p["stateOperators"]]
-    assert p2
-    n_total = len(views) + len(clicks) + 2
-    assert 0 < p2[-1]["stateOperators"][0]["numRowsTotal"] < n_total
-
-    # physical plan: the watermarked symmetric hash join, not a batch
-    # join fallback
-    capsys.readouterr()
-    q2.explain()
-    assert "StreamingSymmetricHashJoin" in capsys.readouterr().out
-
-
-def test_geofence_transitions_two_drains_resume_and_late_drop(
-        spark, tmp_path):
-    """Enter/exit transitions across TWO separate drains (checkpoint
-    resume mid-trajectory) equal a pure-pandas replay of the same walk;
-    a second-drain row behind the restored frontier is dropped; a user
-    whose first event is inside a fence opens with 'enter'."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from loc2vec_spark.streaming import geofence_transitions
-
-    fences = [(0, 10.0, 10.0, 20.0, 20.0),   # fence 0
-              (1, 15.0, 15.0, 30.0, 30.0)]   # fence 1 (overlaps 0)
-    base = dt.datetime(2024, 1, 1)
-
-    def ev(eid, u, minute, lat, lon):
-        return (eid, base + dt.timedelta(minutes=minute), u, lat, lon)
-
-    # u1: outside -> f0 -> f0&f1 overlap -> f1 only -> outside
-    # u2: STARTS inside f0 (first-sight enter), leaves in batch 2
-    # u1's eid 2/20 share ONE timestamp: the (ts, event_id) frontier
-    # must process both (a ts-only frontier would swallow eid 20 and
-    # lose its f0 exit / never-entered state change)
-    batch1 = [ev(1, 1, 0, 5.0, 5.0), ev(2, 1, 1, 12.0, 12.0),
-              ev(20, 1, 1, 5.0, 5.0),
-              ev(3, 1, 2, 17.0, 17.0),
-              ev(10, 2, 0, 11.0, 11.0), ev(11, 2, 1, 13.0, 13.0)]
-    batch2 = [ev(4, 1, 3, 25.0, 25.0), ev(5, 1, 4, 5.0, 5.0),
-              # position-less ping while u1 is inside f1: must be
-              # dropped, NOT read as outside-everything (which would
-              # fire a spurious f1 exit + re-enter)
-              ev(40, 1, 3.5, float("nan"), 25.0),
-              # LATE: behind u2's restored frontier (minute 1) -> drop;
-              # would emit a spurious f0 'exit' if processed
-              ev(12, 2, 0, 40.0, 40.0),
-              ev(13, 2, 5, 40.0, 40.0)]
-    schema = "event_id long, ts timestamp, user_id long, " \
-             "lat double, lon double"
-    src = tmp_path / "gf_src"
-    got = []
-
-    def sink(bdf, bid):
-        got.extend((r["user_id"], r["event_id"], r["fence_id"],
-                    r["transition"]) for r in bdf.collect())
-
-    for rows in (batch1, batch2):
-        spark.createDataFrame(rows, schema) \
-            .write.mode("append").parquet(str(src))
-        q = (geofence_transitions(
-                spark.readStream.schema(schema).parquet(str(src)),
-                fences)
-             .writeStream.outputMode("append").foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "gf_ck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    # pure-pandas replay (batch1 then batch2, frontier drop included)
-    frontier, mask = {}, {}
-    exp = []
-    for eid, ts, u, lat, lon in batch1 + batch2:
-        if lat != lat or lon != lon:          # NaN position: dropped
-            continue
-        t = (ts.timestamp(), eid)
-        if t <= frontier.get(u, (-1.0, -1)):
-            continue
-        m = 0
-        for fid, la0, lo0, la1, lo1 in fences:
-            if la0 <= lat <= la1 and lo0 <= lon <= lo1:
-                m |= 1 << fid
-        for fid in range(2):
-            if (m ^ mask.get(u, 0)) >> fid & 1:
-                exp.append((u, eid, fid,
-                            "enter" if m >> fid & 1 else "exit"))
-        mask[u], frontier[u] = m, t
-    assert sorted(got) == sorted(exp)
-    # the planted semantics themselves
-    assert (1, 2, 0, "enter") in got          # u1 enters f0
-    assert (1, 20, 0, "exit") in got          # same-ts sibling counted
-    assert (1, 3, 0, "enter") in got          # re-enter after same-ts dip
-    assert (1, 3, 1, "enter") in got          # u1 adds f1 in overlap
-    assert (1, 4, 0, "exit") in got           # u1 leaves f0, stays f1
-    assert (1, 5, 1, "exit") in got           # u1 leaves f1
-    assert (2, 10, 0, "enter") in got         # first-sight enter
-    assert (2, 13, 0, "exit") in got          # exit via batch-2 row
-    assert not any(r[1] == 12 for r in got)   # late row dropped
-    assert not any(r[1] == 40 for r in got)   # NaN-position row dropped
-    with pytest.raises(ValueError, match="fence ids"):
-        geofence_transitions(
-            spark.readStream.schema(schema).parquet(str(src)),
-            [(63, 0.0, 0.0, 1.0, 1.0)])

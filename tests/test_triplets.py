@@ -90,21 +90,25 @@ def test_negative_farcell_deterministic(pts):
 
 
 def test_negative_compat_contiguous_blocks(spark):
-    """Reference semantics (data_loading.py:101-112): remainder dropped,
-    negatives are a contiguous slice of the id-ordered anchor list."""
-    n, bs = 37, 8
-    pdf = pd.DataFrame({"id": [f"s_{i:04d}" for i in range(n)]})
-    df = spark.createDataFrame(pdf)
-    out = triplets.negative_sample_compat(df, id_col="id", batch_size=bs,
-                                          seed=42).toPandas()
-    # remainder drop: 37 -> 32 anchors
-    assert len(out) == (n // bs) * bs
-    ids = sorted(pdf.id)
-    pos_of = {s: i for i, s in enumerate(ids)}
+    """Reference semantics (data_loading.py:101-112) of the registered
+    ``negative_compat`` query: remainder dropped, negatives are a
+    contiguous slice of the id-ordered anchor list."""
+    from loc2vec_spark.queries import QUERIES
+    n, bs = 53, 16  # the batch size is fixed at 16 in the SQL
+    ids = [3 * i + 1 for i in range(n)]
+    spark.createDataFrame([(v,) for v in ids], "vec_id BIGINT") \
+         .createOrReplaceTempView("embeddings")
+    out = spark.sql(QUERIES["negative_compat"].spark_sql).toPandas()
+    spark.catalog.dropTempView("embeddings")
+    # remainder drop: 53 -> 48 anchors, each once
+    assert len(out) == out.anchor_id.nunique() == (n // bs) * bs
+    pos_of = {v: i for i, v in enumerate(sorted(ids))}
     out["a_rn"] = out.anchor_id.map(pos_of)
     out["n_rn"] = out.neg_id.map(pos_of)
+    assert out.a_rn.max() < (n // bs) * bs
     for b, grp in out.groupby(out.a_rn // bs):
         grp = grp.sort_values("a_rn")
+        assert len(grp) == bs
         # within a batch: negative row-numbers are contiguous ascending
         diffs = np.diff(grp.n_rn.to_numpy())
         assert np.all(diffs == 1), (b, grp)
